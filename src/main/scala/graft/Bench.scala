@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
@@ -50,7 +51,7 @@ object Bench {
     // without it and inflate the first query by the one-time cost.
     try SparkEntry.queries("q01_impact_agg")(spark, sfDir)
       .queryExecution.toRdd.count()
-    catch { case t: Throwable =>
+    catch { case NonFatal(t) =>
       System.err.println(s"[bench] warm-up failed (first query absorbs " +
         s"one-time JIT cost): ${t.getMessage}")
     }
@@ -145,7 +146,7 @@ object Bench {
             if (touched != null) graft.operators.StageMemo.invalidate(touched)
             execute()
           }
-        } catch { case t: Throwable =>
+        } catch { case NonFatal(t) =>
           System.err.println(s"[bench] $name FAILED (attempt ${attempt + 1}): " +
             t.getMessage)
           // ANY failing attempt marks the query failed — a

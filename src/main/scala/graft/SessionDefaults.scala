@@ -26,11 +26,46 @@ import org.apache.spark.sql.SparkSession
   * deployments run reshuffles wider than 200 partitions, where Spark
   * already takes the SortShuffleWriter path this setting forces — the
   * local bench now exercises the same writer the 100 TB plan would.
-  * Env-overridable for A/B measurement. */
+  * Env-overridable for A/B measurement.
+  *
+  * Generated-code reuse: a long-lived session compiles each distinct
+  * generated class once. Spark's `CodeGenerator.compile` memoizes
+  * classes in one JVM-wide Guava cache keyed on (thread context
+  * classloader, source). Two Spark defaults defeat it:
+  *
+  *  - `spark.sql.codegen.cache.maxEntries` = 100. Guava splits the bound
+  *    across 4 segments of ~25 entries, so a working set thrashes well
+  *    below 100 classes. Measured in perfbench (seed 401): `admission`
+  *    compiled ~190 classes on every timed pass, `curation` 90;
+  *    `analytics` already fit. See [[CodegenCacheEntries]] for the size.
+  *  - `spark.sql.artifact.isolation.enabled` = true. Every session,
+  *    including the clone each `writeStream.start()` runs on, executes
+  *    under its own artifact classloader, so one source compiles again
+  *    under a new key: with the larger cache alone, q148's two stream
+  *    starts still recompiled 34 classes every pass. graft adds no
+  *    session artifacts (no `addArtifact` / `addJar` in the program), so
+  *    one shared classloader changes no class visibility.
+  *
+  * With both, timed perfbench passes compile no class (`curation` at
+  * most 2 in one pass of a run), and traced `planning.codegen_s` fell
+  * 4.08 s → 0 on `admission` and 1.39 s → 0 on `curation`
+  * (OPTIMIZATION_r17.md, "Generated-code reuse"); `CodegenReuseSpec`
+  * holds the line. Both settings are static, read when the JVM's first
+  * session is built, and change no plan. They have no environment
+  * override: the only alternative they could select is recompiling,
+  * and a knob would let one entry point drift from the others. */
 object SessionDefaults {
+  /** Codegen cache bound. One full `graft.Bench` attempt (148 queries,
+    * sf0.1, local[4]) compiles ~2,100 distinct classes, ~525 per Guava
+    * segment; 4000 gives each segment 1000 slots, ~1.9× headroom, so
+    * no segment evicts within a full suite. */
+  val CodegenCacheEntries = 4000
+
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.shuffle.sort.bypassMergeThreshold",
       sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
   // Measured and REJECTED (OPTIMIZATION_r17.md): size-based AQE
   // coalescing (coalescePartitions.parallelismFirst=false + a 64m
   // advisory size, the guide §9 shape) cut per-fragment executor time

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -46,7 +47,7 @@ object TripwireCapture {
     }
     def fireMessage(f: => Unit): String =
       try { f; "GUARD DID NOT FIRE" }
-      catch { case t: Throwable =>
+      catch { case NonFatal(t) =>
         // raise_error surfaces as SparkRuntimeException (USER_RAISED_
         // EXCEPTION) wrapped in task failure layers; walk to the root.
         // getMessage may legitimately be null on a cause link — guard
