@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   * Generated-code reuse: a long-lived session compiles each distinct
   * generated class once. Spark's `CodeGenerator.compile` memoizes
   * classes in one JVM-wide Guava cache keyed on (thread context
-  * classloader, source). Two Spark defaults defeat it:
+  * classloader, source). Three Spark defaults defeat it:
   *
   *  - `spark.sql.codegen.cache.maxEntries` = 100. Guava splits the bound
   *    across 4 segments of ~25 entries, so a working set thrashes well
@@ -45,13 +45,20 @@ import org.apache.spark.sql.SparkSession
   *    starts still recompiled 34 classes every pass. graft adds no
   *    session artifacts (no `addArtifact` / `addJar` in the program), so
   *    one shared classloader changes no class visibility.
+  *  - `spark.sql.codegen.useIdInClassName` = true. Each generated
+  *    class name carries its whole-stage codegen id, and so does the
+  *    source that is the cache key. AQE numbers re-planned stages in
+  *    the order they complete, so a multi-branch plan can produce
+  *    different source on every run, and identical stage code under two
+  *    ids compiles twice. Off, the names are stable; plans are unchanged
+  *    (the id still shows in `explain` as `*(n)`).
   *
-  * With both, timed perfbench passes compile no class (`curation` at
+  * With the first two, timed perfbench passes compile no class (`curation` at
   * most 2 in one pass of a run), and traced `planning.codegen_s` fell
   * 4.08 s → 0 on `admission` and 1.39 s → 0 on `curation`
   * (OPTIMIZATION_r17.md, "Generated-code reuse"); `CodegenReuseSpec`
-  * holds the line. Both settings are static, read when the JVM's first
-  * session is built, and change no plan. They have no environment
+  * holds the line. None of the three changes a plan. The first two are
+  * static, read when the JVM's first session is built. They have no environment
   * override: the only alternative they could select is recompiling,
   * and a knob would let one entry point drift from the others. */
 object SessionDefaults {
@@ -66,6 +73,7 @@ object SessionDefaults {
       sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
   // Measured and REJECTED (OPTIMIZATION_r17.md): size-based AQE
   // coalescing (coalescePartitions.parallelismFirst=false + a 64m
   // advisory size, the guide §9 shape) cut per-fragment executor time

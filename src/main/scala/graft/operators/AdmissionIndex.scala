@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 /** Persisted near-dup admission index — the durable form of the
   * incremental admission gate (q130).
@@ -55,7 +57,27 @@ import org.apache.spark.sql.functions._
   * from the base row count at build time ([[bucketCountsFor]]: one
   * bucket ≈ one task's worth of IO, 2^14 cap at 100 TB), recorded in
   * the index marker, and read back by every probe/append — the layout,
-  * pruning and probe plan are unchanged by the count. */
+  * pruning and probe plan are unchanged by the count.
+  *
+  * Driver work per probe is a chain of Spark jobs, and at small batch
+  * sizes that chain, not executor work, is the probe's latency. So a
+  * probe re-derives nothing that cannot change while a root is live:
+  *
+  *  - frozen reads: a text root's `hot/` and an emb root's `centroids/`
+  *    are written once by the build (df- and centroids-at-build-time);
+  *    folds add delta generations and compaction rewrites only `hsets`/
+  *    `bands`/`fps`/`cells`. Each is read once per committed root
+  *    ([[FrozenMeta]]: keyed on the root's marker, so a rebuild is
+  *    re-read; one entry per index family), not once per probe and per
+  *    micro-batch;
+  *  - declared schemas: every sub-table is read under the schema
+  *    declared next to [[FormatVersion]] ([[SubTableSchemas]]). The
+  *    schemas are part of the layout the version names — a schema
+  *    change bumps it and re-keys every index dir — so no read needs
+  *    parquet schema inference, which ran one Spark job per live root
+  *    and sub-table on every probe;
+  *  - bucket manifests: each touched-bucket/cell id list is collected in
+  *    one job ([[bucketManifest]]), not a shuffle stage plus a collect. */
 object AdmissionIndex {
 
   /** Bucket-count sizing policy: derived from the BASE row count at
@@ -102,6 +124,41 @@ object AdmissionIndex {
   /** Bumping this invalidates every persisted index (layout change).
     * v3: derived bucket counts + staleness-key change. */
   private val FormatVersion = 3
+
+  /** The schema of every persisted sub-table, by sub-table name — part
+    * of the [[FormatVersion]] layout: a change here is a layout change
+    * and bumps the version, which re-keys every index dir, so no reader
+    * ever applies a declared schema to files of another layout. Reads
+    * go through [[readSub]], which hands the schema to the reader:
+    * parquet schema inference runs a Spark job per read, which made
+    * every probe pay one job per live root and sub-table. Partition
+    * columns are declared with the type partition discovery infers
+    * (int), so a declared read and an inferring read see the same
+    * columns in the same order (IndexSchemaSpec pins both). */
+  private[operators] val SubTableSchemas: Map[String, StructType] = {
+    def st(fields: (String, DataType)*): StructType =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    val longs = ArrayType(LongType)
+    Map(
+      "hot" -> st("h" -> LongType),
+      "hsets" -> st("doc_id" -> LongType, "hset" -> longs, "sig" -> longs,
+        "doc_bucket" -> IntegerType),
+      "bands" -> st("doc_id" -> LongType, "band_key" -> StringType,
+        "band_bucket" -> IntegerType),
+      "centroids" -> st("idx" -> IntegerType, "qv" -> longs, "n2" -> LongType),
+      "cells" -> st("vec_id" -> LongType, "qv" -> longs, "n2" -> LongType,
+        "cell" -> IntegerType),
+      "fps" -> st("fp" -> StringType, "bid" -> LongType,
+        "fp_bucket" -> IntegerType),
+      "att" -> st("doc_id" -> LongType, "tier" -> StringType,
+        "match_id" -> LongType))
+  }
+
+  /** One persisted sub-table of `root`, read under its declared schema
+    * — no inference job. */
+  private[operators] def readSub(spark: SparkSession, root: String,
+                                 sub: String): DataFrame =
+    spark.read.schema(SubTableSchemas(sub)).parquet(s"$root/$sub")
 
   /** Repo-local by default (a deployment points this at an object-store
     * prefix). Relative to the working directory like `spark-warehouse`. */
@@ -531,7 +588,7 @@ object AdmissionIndex {
     * COMMITTED delta generation (marker present, non-empty), sorted for
     * deterministic union order. A generation without its marker (a
     * crashed append) is invisible — appends are atomic at the marker. */
-  private def indexRoots(dir: String): Seq[String] = {
+  private[operators] def indexRoots(dir: String): Seq[String] = {
     val delta = java.nio.file.Paths.get(dir, "delta")
     val gens =
       if (!java.nio.file.Files.isDirectory(delta)) Seq.empty[String]
@@ -572,6 +629,83 @@ object AdmissionIndex {
     java.nio.file.Files.exists(java.nio.file.Paths.get(
       s"$dir/delta/${md5hex(genKey).take(16)}", okMarker))
 
+  // ---- frozen per-root metadata: read once per committed root ------
+  // (hot set, IVF centroids — why they are frozen: module doc)
+
+  /** Identity of a root's committed marker: file key (device + inode),
+    * mtime and ctime. Every publish of a root — build, hardlink clone of
+    * a pristine snapshot, compaction's marker rewrite — creates a new
+    * marker file or a new link to one, which changes the ctime at least;
+    * None while the root is uncommitted. */
+  private def markerStamp(dir: String): Option[String] = {
+    val m = java.nio.file.Paths.get(dir, okMarker)
+    try {
+      val a = java.nio.file.Files.readAttributes(m,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      val ctime =
+        try java.nio.file.Files.getAttribute(m, "unix:ctime").toString
+        catch {
+          case _: UnsupportedOperationException |
+               _: IllegalArgumentException => ""
+        }
+      Some(s"${a.fileKey}|${a.lastModifiedTime}|$ctime")
+    } catch { case _: java.io.IOException => None }
+  }
+
+  /** The index family of a root dir: its `{path}-{family}` name prefix
+    * (see [[dirFor]]), under the same parent. Generations of one corpus
+    * and parameter set share it. */
+  private def familyOf(dir: String): String = {
+    val p = java.nio.file.Paths.get(dir)
+    val name = p.getFileName.toString.split("-").take(2).mkString("-")
+    Option(p.getParent).fold(name)(par => s"$par/$name")
+  }
+
+  /** Per-process cache of one frozen per-root value, read by `read` on a
+    * miss. An entry is valid for one (root dir, [[markerStamp]]): a
+    * rebuilt root is re-read, and an uncommitted root is never cached.
+    * One entry per index family — a newer corpus generation replaces
+    * its predecessor's entry — so a long-lived process over a changing
+    * corpus holds one entry per family it probes, not one per
+    * generation. Cached arrays are shared: callers must not mutate. */
+  private[operators] final class FrozenMeta[A](read: (SparkSession, String) => A) {
+    private val byFamily =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, String, A)]()
+    private val misses = new java.util.concurrent.atomic.AtomicLong()
+
+    def apply(spark: SparkSession, dir: String): A = markerStamp(dir) match {
+      case None => misses.incrementAndGet(); read(spark, dir)
+      case Some(stamp) =>
+        val fam = familyOf(dir)
+        val hit = byFamily.get(fam)
+        if (hit != null && hit._1 == dir && hit._2 == stamp) hit._3
+        else {
+          misses.incrementAndGet()
+          val v = read(spark, dir)
+          byFamily.put(fam, (dir, stamp, v))
+          v
+        }
+    }
+
+    /** Reads so far (cache misses). */
+    def reads: Long = misses.get()
+    def entries: Int = byFamily.size
+    def holds(dir: String): Boolean =
+      Option(byFamily.get(familyOf(dir))).exists(_._1 == dir)
+  }
+
+  /** A text root's template-shingle hot set. */
+  private[operators] val hotSets = new FrozenMeta[Array[Long]](
+    (spark, dir) => readSub(spark, dir, "hot").collect().map(_.getLong(0)))
+
+  /** An emb root's centroid summary (qv, n2), in centroid-index order. */
+  private[operators] val centroidSets = new FrozenMeta[Array[(Array[Long], Long)]](
+    (spark, dir) => {
+      import spark.implicits._
+      readSub(spark, dir, "centroids").as[(Int, Array[Long], Long)].collect()
+        .sortBy(_._1).map { case (_, qv, n2) => (qv, n2) }
+    })
+
   /** One shingle → hot-filter → sign pass over a batch, under the
     * index's frozen hot set: (doc_id, hset, sig). THE shared per-ingest
     * batch stage — [[probePairsSigned]] probes from it and
@@ -585,7 +719,7 @@ object AdmissionIndex {
                   threshold: Double = Dedup.DefaultThreshold): DataFrame = {
     val spark = batch.sparkSession
     val (b, r) = Dedup.lshBanding(threshold)
-    val hot = spark.read.parquet(s"$dir/hot").collect().map(_.getLong(0))
+    val hot = hotSets(spark, dir)
     Dedup.applyHotFilter(Dedup.hashShingled(batch), hot)
       .select(col("doc_id"), col("hset"),
         Dedup.permMinsUdf(b * r)(col("hset")).as("sig"))
@@ -721,9 +855,22 @@ object AdmissionIndex {
   private def prunedUnion(spark: SparkSession, roots: Seq[String],
                           sub: String, partCol: String,
                           touched: Array[Int]): DataFrame =
-    roots.map(rt => spark.read.parquet(s"$rt/$sub")
+    roots.map(rt => readSub(spark, rt, sub)
         .filter(col(partCol).isin(touched.map(Int.box).toIndexedSeq: _*)))
       .reduce(_.unionByName(_))
+
+  /** The touched-bucket manifest of a batch: the distinct values of
+    * one int column (bucket or cell ids), sorted so `isin` lists and
+    * plan dumps are stable. ONE Spark job: each partition dedups its own
+    * ids map-side (`mapPartitions`, inside the Dataset's tracked SQL
+    * execution) and the driver merges at most partitions × buckets ints.
+    * `distinct().collect()` paid an AQE shuffle-stage job plus a result
+    * job for the same few ints. */
+  private def bucketManifest(df: DataFrame, c: Column): Array[Int] = {
+    import df.sparkSession.implicits._
+    df.select(c).as[Int].mapPartitions(_.toSet.iterator)
+      .collect().distinct.sorted
+  }
 
   def probePairs(batch: DataFrame, dir: String,
                  threshold: Double = Dedup.DefaultThreshold): DataFrame = {
@@ -753,8 +900,7 @@ object AdmissionIndex {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     locally {
       try {
-        val touched = bandsB.select(col("band_bucket")).distinct()
-          .collect().map(_.getInt(0))
+        val touched = bucketManifest(bandsB, col("band_bucket"))
         val roots = indexRoots(dir)
         val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
         val cand = bandsB.as("x")
@@ -763,9 +909,8 @@ object AdmissionIndex {
           .distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val candBuckets = cand
-            .select(pmod(hash(col("b")), lit(docBuckets)).as("db"))
-            .distinct().collect().map(_.getInt(0))
+          val candBuckets =
+            bucketManifest(cand, pmod(hash(col("b")), lit(docBuckets)))
           val baseH = prunedUnion(spark, roots, "hsets", "doc_bucket", candBuckets)
             .select(col("doc_id"), col("hset"))
           // localCheckpoint (eager), NOT persist-and-leak: materializes
@@ -835,7 +980,7 @@ object AdmissionIndex {
     val spark = batchDocs.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val (b, r) = Dedup.lshBanding(threshold)
-    val hot = spark.read.parquet(s"$dir/hot").collect().map(_.getLong(0))
+    val hot = hotSets(spark, dir)
     val shB = Dedup.applyHotFilter(Dedup.hashShingled(batchDocs), hot)
     val sigB = shB.select(col("doc_id").as("a"), col("hset").as("ha"),
       Dedup.permMinsUdf(b * r)(col("hset")).as("siga"))
@@ -844,10 +989,10 @@ object AdmissionIndex {
         explode(expr(s"sequence(0, ${b - 1})")).as("band"))
       .withColumn("band_key", expr(bandKeyExpr("siga", r)))
     val roots = indexRoots(dir)
-    val baseBands = roots.map(rt => spark.read.parquet(s"$rt/bands")
+    val baseBands = roots.map(rt => readSub(spark, rt, "bands")
         .select(col("doc_id").as("bb"), col("band_key")))
       .reduce(_.unionByName(_))
-    val baseH = roots.map(rt => spark.read.parquet(s"$rt/hsets")
+    val baseH = roots.map(rt => readSub(spark, rt, "hsets")
         .select(col("doc_id").as("b"), col("hset").as("hb"), col("sig").as("sigb")))
       .reduce(_.unionByName(_))
     val rMatch = (0 until r)
@@ -903,7 +1048,7 @@ object AdmissionIndex {
     graft.functions.GraftFunctions.register(spark)
     val (b, r) = Dedup.lshBanding(threshold)
     val (bandBuckets, docBuckets) = readBucketCounts(dir)
-    val hot = spark.read.parquet(s"$dir/hot").collect().map(_.getLong(0))
+    val hot = hotSets(spark, dir)
     val shB = Dedup.applyHotFilter(Dedup.hashShingled(batchDocs), hot)
     val sigB = shB.select(col("doc_id").as("a"), col("hset").as("ha"),
       Dedup.permMinsUdf(b * r)(col("hset")).as("siga"))
@@ -913,16 +1058,14 @@ object AdmissionIndex {
       .withColumn("band_key", expr(bandKeyExpr("siga", r)))
       .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched = bandsB.select(col("band_bucket")).distinct()
-      .collect().map(_.getInt(0))
+    val touched = bucketManifest(bandsB, col("band_bucket"))
     val roots = indexRoots(dir)
     val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
       .select(col("doc_id").as("bb"), col("band_key"))
     val matched = bandsB.join(baseBands, Seq("band_key"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candBuckets = matched
-      .select(pmod(hash(col("bb")), lit(docBuckets)).as("db"))
-      .distinct().collect().map(_.getInt(0))
+    val candBuckets =
+      bucketManifest(matched, pmod(hash(col("bb")), lit(docBuckets)))
     val baseH = prunedUnion(spark, roots, "hsets", "doc_bucket", candBuckets)
       .select(col("doc_id").as("bdoc"), col("hset").as("hb"),
         col("sig").as("sigb"))
@@ -1062,7 +1205,7 @@ object AdmissionIndex {
         DefaultChunkVerifyTimeout): DataFrame = {
     val spark = batch.sparkSession
     val (b, r) = Dedup.lshBanding(threshold)
-    val hot = spark.read.parquet(s"$dir/hot").collect().map(_.getLong(0))
+    val hot = hotSets(spark, dir)
     // sign the whole batch ONCE (shingle + permMins is the dominant
     // batch-side term); chunk ids ride along so every later stage
     // derives its chunk slice by a cached-column filter
@@ -1128,8 +1271,7 @@ object AdmissionIndex {
       try {
         // the touched-bucket manifest: union of every chunk's band
         // buckets, collected once (bounded by the bucket constant)
-        val touched = bandsB.select(col("band_bucket")).distinct()
-          .collect().map(_.getInt(0))
+        val touched = bucketManifest(bandsB, col("band_bucket"))
         val roots = indexRoots(dir)
         val baseBands = prunedUnion(spark, roots, "bands", "band_bucket",
             touched)
@@ -1157,9 +1299,8 @@ object AdmissionIndex {
           Future {
             try {
               val mi = matched.filter(col("chunk") === i)
-              val candBuckets = mi
-                .select(pmod(hash(col("bb")), lit(docBuckets)).as("db"))
-                .distinct().collect().map(_.getInt(0))
+              val candBuckets =
+                bucketManifest(mi, pmod(hash(col("bb")), lit(docBuckets)))
               val baseH = prunedUnion(spark, roots, "hsets", "doc_bucket",
                   candBuckets)
                 .select(col("doc_id").as("bdoc"), col("hset").as("hb"),
@@ -1375,11 +1516,12 @@ object AdmissionIndex {
     val dir = ensureIndex(spark, sfDir, threshold, maxDfFrac)
     val out = s"$dir/sunk148"
     deleteRec(java.nio.file.Paths.get(out))
+    // one read of the documents (one schema resolution), filtered per
+    // residue
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
     val batches = Seq(1L, 3L).map { res =>
-      graft.Tables.documents(spark, sfDir)
-        .filter(col("doc_id") % 4 === res)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .collect().toSeq
+      docs.filter(col("doc_id") % 4 === res).collect().toSeq
     }
     def drive(bs: Seq[Seq[(Long, String)]]): Unit = {
       val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -1541,7 +1683,7 @@ object AdmissionIndex {
       val roots = dir +: gens
       val tmp = buildTmpDir(dir)
       subTables.foreach { case (sub, partCol) =>
-        merge(sub, roots.map(rt => spark.read.parquet(s"$rt/$sub"))
+        merge(sub, roots.map(rt => readSub(spark, rt, sub))
             .reduce(_.unionByName(_)))
           .repartition(col(partCol))
           .write.mode("overwrite").partitionBy(partCol)
@@ -1811,19 +1953,15 @@ object AdmissionIndex {
   private def embScored(batch: DataFrame, dir: String,
                         threshold: Double, nProbe: Int): DataFrame = {
     val spark = batch.sparkSession
-    import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("idx")).select(col("qv"), col("n2"))
-      .as[(Array[Long], Long)].collect()
+    val cents = centroidSets(spark, dir)
     val bc = spark.sparkContext.broadcast(cents)
     val probes = Similarity.quantized(batch)
       .select(col("vec_id"), col("qv"), col("n2"),
         explode(Similarity.ivfProbeUdf(bc, nProbe)(col("qv"))).as("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = probes.select(col("cell")).distinct()
-        .collect().map(_.getInt(0))
+      val touched = bucketManifest(probes, col("cell"))
       // union of base + committed delta generations, partition-pruned
       // to the probed cells — same multi-root shape as the text probe
       val baseCells =
@@ -1852,17 +1990,14 @@ object AdmissionIndex {
                       threshold: Double = EmbThreshold,
                       nProbe: Int = EmbNProbe): DataFrame = {
     val spark = batchVecs.sparkSession
-    import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("idx")).select(col("qv"), col("n2"))
-      .as[(Array[Long], Long)].collect()
+    val cents = centroidSets(spark, dir)
     val bc = spark.sparkContext.broadcast(cents)
     val probes = Similarity.quantized(batchVecs)
       .select(col("vec_id"), col("qv"), col("n2"),
         explode(Similarity.ivfProbeUdf(bc, nProbe)(col("qv"))).as("cell"))
     val baseCells = indexRoots(dir)
-      .map(rt => spark.read.parquet(s"$rt/cells"))
+      .map(rt => readSub(spark, rt, "cells"))
       .reduce(_.unionByName(_))
     probes.as("x").join(baseCells.as("y"), Seq("cell"))
       .select(col("x.vec_id").as("batch_vec"), col("y.vec_id").as("base_vec"),
@@ -1965,14 +2100,11 @@ object AdmissionIndex {
                           genKey: String): Unit =
     synchronized {
       val spark = admitted.sparkSession
-      import spark.implicits._
       graft.functions.GraftFunctions.register(spark)
       val gdir = s"$dir/delta/${md5hex(genKey).take(16)}"
       if (java.nio.file.Files.exists(
         java.nio.file.Paths.get(gdir, okMarker))) return
-      val cents = spark.read.parquet(s"$dir/centroids")
-        .orderBy(col("idx")).select(col("qv"), col("n2"))
-        .as[(Array[Long], Long)].collect()
+      val cents = centroidSets(spark, dir)
       val bc = spark.sparkContext.broadcast(cents)
       val assigned = Similarity.quantized(admitted)
         .select(col("vec_id"), col("qv"), col("n2"),
@@ -2312,8 +2444,7 @@ object AdmissionIndex {
       .select(col("doc_id"), fpCol(col("text")).as("fp"))
       .withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched = bf.select(col("fp_bucket")).distinct()
-      .collect().map(_.getInt(0))
+    val touched = bucketManifest(bf, col("fp_bucket"))
     val idx = prunedUnion(spark, indexRoots(dir), "fps", "fp_bucket", touched)
     val out = bf.join(idx.select(col("fp"), col("bid")), Seq("fp"))
       .groupBy(col("doc_id")).agg(min(col("bid")).as("exact_id"))
@@ -2630,7 +2761,7 @@ object AdmissionIndex {
   }
 
   private def readStaged(spark: SparkSession, adir: String): DataFrame =
-    spark.read.parquet(s"$adir/att")
+    readSub(spark, adir, "att")
 
   /** Fold one round's admitted docs into all three tiers — each append
     * idempotent per genKey. `signed1` (the probe's own signed frame)

@@ -347,7 +347,12 @@ object Dedup {
         // branches reuse the shuffle (ReusedExchange) rather than re-hashing
         // every shingle per branch, and the join needs no further exchange
         .repartition(col("band_key"))
-      val cand = banded.as("x").join(banded.as("y"), "band_key")
+      // shuffle-hash with y as the build side, as in Similarity's
+      // self-joins: unhinted, AQE broadcast this join at small sizes with
+      // a build side that differed from run to run (new generated source
+      // per variant)
+      val cand = banded.as("x").join(banded.as("y").hint("shuffle_hash"),
+          "band_key")
         .filter(col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
         .distinct()
