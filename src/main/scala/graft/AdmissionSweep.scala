@@ -618,7 +618,7 @@ object AdmissionSweep {
 
   /** Generation-count sweep (r10 verdict item 3): the one admission
     * axis with no committed artifact was probe cost vs the NUMBER of
-    * delta generations — [[graft.operators.AdmissionIndex.indexRoots]]
+    * delta generations — [[graft.operators.GenerationStore.indexRoots]]
     * unions one scan branch per committed generation into every probe,
     * so N ingests without maintenance = N small parquet roots per
     * probe. Fixed base, fixed-shape per-round batch (1000 planted

@@ -49,14 +49,8 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  // Shared with FuzzVerify's oracle dump.
-  private[graft] def jsonQuote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  // Shared with FuzzVerify's oracle dump; the index markers' codec owns
+  // the one implementation.
+  private[graft] def jsonQuote(s: String): String =
+    operators.GenerationStore.jsonQuote(s)
 }

@@ -71,13 +71,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
   *    re-read; one entry per index family), not once per probe and per
   *    micro-batch;
   *  - declared schemas: every sub-table is read under the schema
-  *    declared next to [[FormatVersion]] ([[SubTableSchemas]]). The
+  *    declared next to [[GenerationStore.FormatVersion]] ([[SubTableSchemas]]). The
   *    schemas are part of the layout the version names — a schema
   *    change bumps it and re-keys every index dir — so no read needs
   *    parquet schema inference, which ran one Spark job per live root
   *    and sub-table on every probe;
   *  - bucket manifests: each touched-bucket/cell id list is collected in
-  *    one job ([[bucketManifest]]), not a shuffle stage plus a collect. */
+  *    one job ([[bucketManifest]]), not a shuffle stage plus a collect.
+  *
+  * Persistence — dir keying, the commit marker, atomic publish, delta
+  * generations, compaction, pristine snapshots and build locks — is one
+  * protocol for all three tiers, stated in [[GenerationStore]]. Each
+  * tier here supplies only its key spelling, base build, generation
+  * write and compaction sub-tables. */
 object AdmissionIndex {
 
   /** Bucket-count sizing policy: derived from the BASE row count at
@@ -114,19 +120,13 @@ object AdmissionIndex {
   /** (bandBuckets, docBuckets) recorded in an index's marker at build
     * time — the probe/append side of the sizing contract. */
   private def readBucketCounts(dir: String): (Int, Int) = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, okMarker)), "UTF-8")
-    def f(k: String) = ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt)
-    (f("bandBuckets").getOrElse(MinBuckets), f("docBuckets").getOrElse(MinBuckets))
+    val m = GenerationStore.readMarker(dir)
+    def f(k: String) = m.get(k).fold(MinBuckets)(_.toInt)
+    (f("bandBuckets"), f("docBuckets"))
   }
 
-  /** Bumping this invalidates every persisted index (layout change).
-    * v3: derived bucket counts + staleness-key change. */
-  private val FormatVersion = 3
-
   /** The schema of every persisted sub-table, by sub-table name — part
-    * of the [[FormatVersion]] layout: a change here is a layout change
+    * of the [[GenerationStore.FormatVersion]] layout: a change here is a layout change
     * and bumps the version, which re-keys every index dir, so no reader
     * ever applies a declared schema to files of another layout. Reads
     * go through [[readSub]], which hands the schema to the reader:
@@ -160,70 +160,19 @@ object AdmissionIndex {
                                  sub: String): DataFrame =
     spark.read.schema(SubTableSchemas(sub)).parquet(s"$root/$sub")
 
-  /** Repo-local by default (a deployment points this at an object-store
-    * prefix). Relative to the working directory like `spark-warehouse`. */
-  def indexRoot: String =
-    sys.env.getOrElse("GRAFT_INDEX_ROOT", "target/graft-index")
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Staleness component of the index key: regenerating a fixture in
-    * place (same path, new bytes) must produce a different key, or a
-    * stale index would silently answer for the new corpus. Two paths:
-    *
-    *  1. O(1) — a `_GRAFT_MANIFEST` file directly under the corpus dir
-    *     (or `{path}.manifest` beside a single-file corpus): its bytes
-    *     ARE the key. A corpus writer that bumps the manifest per
-    *     publish gives constant-time staleness with ZERO listing — the
-    *     object-store path, where a recursive LIST per lookup (the r10
-    *     shape) is a full prefix scan. The manifest is authoritative:
-    *     content edits that do not bump it are the writer's contract
-    *     violation, not detectable here by design.
-    *  2. fallback — one tree walk folding file count + total bytes +
-    *     max mtime. Count+bytes catch regeneration within filesystem
-    *     timestamp granularity and same-mtime content rewrites (the r10
-    *     key was mtime-only and missed both); mtime catches same-size
-    *     rewrites. */
-  private def stalenessKey(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    val manifest = p.resolve("_GRAFT_MANIFEST")
-    val sibling = java.nio.file.Paths.get(path + ".manifest")
-    if (java.nio.file.Files.isRegularFile(manifest))
-      "m:" + new String(java.nio.file.Files.readAllBytes(manifest), "UTF-8").trim
-    else if (java.nio.file.Files.isRegularFile(sibling))
-      "m:" + new String(java.nio.file.Files.readAllBytes(sibling), "UTF-8").trim
-    else if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try {
-        var n = 0L; var bytes = 0L; var m = 0L
-        val it = s.iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          n += 1
-          if (java.nio.file.Files.isRegularFile(f))
-            bytes += java.nio.file.Files.size(f)
-          val t = java.nio.file.Files.getLastModifiedTime(f).toMillis
-          if (t > m) m = t
-        }
-        s"w:$n|$bytes|$m"
-      } finally s.close()
-    }
-  }
-
-  /** Index directory for a corpus path + parameter set:
-    * `{root}/{path-hash}-{key-hash}`. The path hash groups every index
-    * generation of one corpus (so stale generations can be swept); the
-    * key hash covers content mtime + every parameter that shapes the
-    * persisted bytes. */
+  /** Index directory for a corpus path + parameter set
+    * ([[GenerationStore.dirFor]]): the key covers every parameter that
+    * shapes the persisted bytes. */
   def indexDirFor(docsPath: String, threshold: Double,
                   maxDfFrac: Double,
-                  buckets: Option[(Int, Int)] = None): String = {
+                  buckets: Option[(Int, Int)] = None): String =
+    GenerationStore.dirFor(docsPath, textKey(threshold, maxDfFrac, buckets))
+
+  /** The text tier's content key: threshold, df cut, banding, layout. */
+  private def textKey(threshold: Double, maxDfFrac: Double,
+                      buckets: Option[(Int, Int)]): String = {
     val (b, r) = Dedup.lshBanding(threshold)
-    dirFor(docsPath,
-      s"$threshold|$maxDfFrac|b=$b,r=$r|${bucketTag(buckets)}")
+    s"$threshold|$maxDfFrac|b=$b,r=$r|${bucketTag(buckets)}"
   }
 
   /** Key component for the bucket layout: `auto` = the sizing policy
@@ -233,129 +182,17 @@ object AdmissionIndex {
   private def bucketTag(buckets: Option[(Int, Int)]): String =
     buckets.map { case (bb, db) => s"bk$bb,$db" }.getOrElse("auto")
 
-  /** Dir name = `{path-hash}-{family-hash}-{key-hash}`: the family hash
-    * covers the PARAMETERS (so two parameterizations of one corpus —
-    * e.g. the mod-2 and mod-3 split conventions, or text vs embedding —
-    * coexist), the key hash additionally covers content mtime (so
-    * [[sweepStale]] can delete superseded GENERATIONS of one family
-    * without touching its siblings). */
-  private def dirFor(path: String, paramKey: String): String = {
-    val pathKey = md5hex(path).take(12)
-    val fam = md5hex(paramKey).take(8)
-    val key = md5hex(
-      s"$path|${stalenessKey(path)}|$paramKey|v$FormatVersion").take(16)
-    s"$indexRoot/$pathKey-$fam-$key"
-  }
-
-  private val okMarker = "_GRAFT_INDEX_OK"
-
-  // ---- pristine root snapshots: same-content cold builds clone ------
-  //
-  // `famTag` isolates LIFECYCLE STATE (which delta generations fold into
-  // a dir), never root content: a freshly-built root is a pure function
-  // of (corpus path, corpus staleness, famTag-free parameters). The
-  // driver's cold bench therefore used to pay the SAME base build
-  // several times — q137's mod-3 text root was rebuilt from scratch for
-  // q143's "fd" family, q138's mod-4 root for q144's, q141/q142's emb
-  // roots for the composed lifecycles — each a full shingle+sign (or
-  // quantize+assign) pass over the base corpus. The first build of each
-  // content key now publishes a HARDLINK snapshot under
-  // `.pristine/` (same publish protocol; ~zero bytes — links share the
-  // parquet inodes, and nothing ever mutates a published file in place:
-  // compaction and sweeps only unlink+replace whole directories), and
-  // later same-content ensures clone the snapshot instead of
-  // re-building (guide §1.2: don't compute things twice). Snapshots
-  // never accumulate generations (no lifecycle folds into `.pristine/`)
-  // and are never compacted, so they stay pristine by construction; a
-  // clone failure of any kind falls back to the full build.
-  private def pristineDirFor(path: String, paramKeyNoFam: String): String = {
-    val pathKey = md5hex(path).take(12)
-    val fam = md5hex(paramKeyNoFam).take(8)
-    val key = md5hex(
-      s"$path|${stalenessKey(path)}|$paramKeyNoFam|v$FormatVersion").take(16)
-    s"$indexRoot/.pristine/$pathKey-$fam-$key"
-  }
-
-  /** Recreate `src`'s tree at `dst`: directories created, regular files
-    * HARDLINKED (same filesystem; a cross-device or unsupported link
-    * throws and the caller falls back). */
-  private def linkTree(src: java.nio.file.Path,
-                       dst: java.nio.file.Path): Unit = {
-    java.nio.file.Files.createDirectories(dst)
-    val s = java.nio.file.Files.list(src)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val c = it.next()
-        val d = dst.resolve(c.getFileName)
-        if (java.nio.file.Files.isDirectory(c)) linkTree(c, d)
-        else { java.nio.file.Files.createLink(d, c); () }
-      }
-    } finally s.close()
-  }
-
-  /** Build-or-clone a root into a fresh tmp and publish it at `dir`:
-    * a committed snapshot for `snapDir`'s content key is cloned;
-    * otherwise `build(tmp)` runs and its result is ALSO published as
-    * the snapshot (hardlinks — the clone costs inode links, not bytes).
-    * Superseded snapshots of the same (corpus, family) prefix are swept
-    * exactly like superseded index generations. Caller holds
-    * dirLock(dir). */
-  private def buildOrClone(dir: String, snapDir: String)
-                          (build: String => Unit): Unit = {
-    val snapPath = java.nio.file.Paths.get(snapDir)
-    val tmp = buildTmpDir(dir)
-    val cloned =
-      java.nio.file.Files.exists(snapPath.resolve(okMarker)) &&
-        (try { linkTree(snapPath, java.nio.file.Paths.get(tmp)); true }
-         catch { case scala.util.control.NonFatal(_) =>
-           deleteRec(java.nio.file.Paths.get(tmp)); false })
-    if (!cloned) {
-      build(tmp)
-      // publish the snapshot FIRST (from hardlinks of the fresh build),
-      // then the family dir gets the build itself; losing a snapshot
-      // race to a sibling process is fine (publish resolves it)
-      try {
-        val sname = snapPath.getFileName.toString
-        val sprefix = sname.split("-").take(2).mkString("-") + "-"
-        val pristineRoot = snapPath.getParent
-        if (java.nio.file.Files.isDirectory(pristineRoot)) {
-          val ls = java.nio.file.Files.list(pristineRoot)
-          try {
-            val it = ls.iterator()
-            while (it.hasNext) {
-              val c = it.next()
-              val n = c.getFileName.toString
-              if (n.startsWith(sprefix) && n != sname) deleteRec(c)
-            }
-          } finally ls.close()
-        }
-        val stmp = buildTmpDir(snapDir)
-        linkTree(java.nio.file.Paths.get(tmp),
-          java.nio.file.Paths.get(stmp))
-        publish(stmp, snapDir)
-      } catch { case scala.util.control.NonFatal(_) => () /* snapshot is
-        an optimization — never fail the build for it */ }
-    }
-    publish(tmp, dir)
-  }
-
-  /** Per-index-dir build monitors: two threads ensuring the SAME dir
-    * serialize (one builds, the other finds the marker), while ensures
-    * of DIFFERENT dirs — e.g. the front door's three independent index
-    * families — build concurrently (guide §2.6: the emb+fp builds hide
-    * inside the text build on a cold store). Cross-process exclusion is
-    * unchanged: the build-to-tmp + atomic-publish protocol already
-    * resolves racing processes. [[sweepStale]] keeps running under the
-    * object monitor so a sweep can never interleave with a generation
-    * fold (appendGenerationSigned holds the same monitor) — the lock
-    * order is always dirLock → object monitor, never the reverse, so no
-    * cycle exists. The map is bounded by the distinct index dirs a
-    * session touches. */
-  private val dirLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def dirLock(dir: String): Object =
-    dirLocks.computeIfAbsent(dir, _ => new Object)
+  /** `famTag`: the OWNING-LIFECYCLE tag of every tier's key. An index
+    * accumulates delta generations, so two lifecycles folding into ONE
+    * dir would leak each other's admits into their probes (q137's
+    * text-only gate admits docs the composed gate sem-rejects — sharing
+    * its index made q143's batch2 "see" them). In production that
+    * sharing is the point — one corpus, one gate; for independently-
+    * specified lifecycles the tag keys them apart. Empty = the default
+    * family (existing dirs stay valid). It never enters a pristine
+    * snapshot's content key. */
+  private def famSuffix(famTag: String): String =
+    if (famTag.isEmpty) "" else s"|f$famTag"
 
   /** Hang-breaker for awaited concurrent index builds: generous enough
     * that no healthy build at any measured scale can trip it (300× built
@@ -364,28 +201,6 @@ object AdmissionIndex {
   val DefaultEnsureTimeout: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.FiniteDuration(24, java.util.concurrent.TimeUnit.HOURS)
 
-  /** Build-if-absent, synchronized against sibling THREADS and made
-    * safe against sibling PROCESSES by the build-to-temp + atomic-rename
-    * publish (two processes that both miss the marker each build
-    * privately under `.tmp/` and exactly one rename wins — the r10
-    * ADVICE race, where both built into the live dir with
-    * mode(overwrite), is closed). Sweeps superseded generations of the
-    * same corpus before building. Returns the index dir.
-    *
-    * `baseMod`: the modulo-split convention for the base side — base =
-    * doc_id % baseMod == 0 (2 = the q65 even/odd convention; q137's
-    * lifecycle uses 3, q138's compaction lifecycle 4, so disjoint
-    * incoming batches exist). Part of the index key: different
-    * conventions are different indexes.
-    *
-    * `famTag`: the OWNING-LIFECYCLE tag. An index accumulates delta
-    * generations, so two lifecycles folding into ONE dir would leak
-    * each other's admits into their probes (q137's text-only gate
-    * admits docs the composed gate sem-rejects — sharing its index
-    * made q143's batch2 "see" them). In production that sharing is
-    * the point — one corpus, one gate; for independently-specified
-    * lifecycles the tag keys them apart. Empty = the default family
-    * (existing dirs stay valid). */
   /** The text index dir for ANY parameterization — the baseMod/famTag
     * generalization of [[indexDirFor]] (which keeps the historical
     * mod-2 default-family spelling): [[ensureIndex]] and harnesses
@@ -396,13 +211,18 @@ object AdmissionIndex {
                       famTag: String = ""): String =
     if (baseMod == 2 && famTag.isEmpty)
       indexDirFor(docsPath, threshold, maxDfFrac, buckets)
-    else {
-      val (b, r) = Dedup.lshBanding(threshold)
-      val fam = if (famTag.isEmpty) "" else s"|f$famTag"
-      dirFor(docsPath, s"$threshold|$maxDfFrac|b=$b,r=$r|" +
-        s"${bucketTag(buckets)}|mod$baseMod$fam")
-    }
+    else GenerationStore.dirFor(docsPath,
+      textKey(threshold, maxDfFrac, buckets) + s"|mod$baseMod" + famSuffix(famTag))
 
+  /** Build-if-absent ([[GenerationStore.ensure]]: thread- and
+    * process-safe, sweeps superseded generations, clones a pristine
+    * snapshot when one exists). Returns the index dir.
+    *
+    * `baseMod`: the modulo-split convention for the base side — base =
+    * doc_id % baseMod == 0 (2 = the q65 even/odd convention; q137's
+    * lifecycle uses 3, q138's compaction lifecycle 4, so disjoint
+    * incoming batches exist). Part of the index key: different
+    * conventions are different indexes. `famTag`: see [[famSuffix]]. */
   def ensureIndex(spark: SparkSession, sfDir: String,
                   threshold: Double = Dedup.DefaultThreshold,
                   maxDfFrac: Double = Dedup.DefaultMaxDfFrac,
@@ -410,296 +230,23 @@ object AdmissionIndex {
                   buckets: Option[(Int, Int)] = None,
                   famTag: String = ""): String = {
     val docsPath = s"$sfDir/documents.parquet"
-    val dir = textIndexDirFor(docsPath, threshold, maxDfFrac,
-      baseMod, buckets, famTag)
-    dirLock(dir).synchronized {
-      val marker = java.nio.file.Paths.get(dir, okMarker)
-      if (!java.nio.file.Files.exists(marker)) {
-        synchronized { sweepStale(docsPath, keep = dir) }
-        val base = graft.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % baseMod === 0)
-        val (b, r) = Dedup.lshBanding(threshold)
-        val snap = pristineDirFor(docsPath,
-          s"$threshold|$maxDfFrac|b=$b,r=$r|${bucketTag(buckets)}" +
-            (if (baseMod == 2) "" else s"|mod$baseMod"))
-        buildOrClone(dir, snap)(
-          buildIndex(base, _, threshold, maxDfFrac, buckets))
-      }
-    }
-    dir
-  }
-
-  /** Private scratch dir for one build attempt, OUTSIDE the generation
-    * namespace so [[sweepStale]] can never delete an in-flight sibling
-    * build (tmp dirs live under `.tmp/`, whose name matches no
-    * `{path}-{family}-` prefix). */
-  private def buildTmpDir(dir: String): String = {
-    val name = java.nio.file.Paths.get(dir).getFileName.toString
-    s"$indexRoot/.tmp/$name-${ProcessHandle.current().pid()}-${System.nanoTime()}"
-  }
-
-  /** Atomically publish a fully-built directory (its marker was written
-    * LAST, inside `tmp`): one rename makes the whole build visible at
-    * once. If another process won the race, our build is redundant —
-    * delete it and use theirs. A markerless `dest` (a crashed build or
-    * a crashed compaction window) is removed first — but its `delta/`
-    * and `staged/` subtrees are MOVED into `tmp` before the delete
-    * when `tmp` has none of its own: those are committed generations
-    * (admitted docs) and staged round attributions, written under the
-    * root but owned by their own markers. Deleting them with the root
-    * would silently lose every admitted doc on the
-    * crashed-compaction → rebuild path — exactly the "no admitted doc
-    * is ever lost" contract [[compactIndex]] documents. */
-  private[operators] def publish(tmp: String, dest: String): Unit = {
-    val t = java.nio.file.Paths.get(tmp)
-    val d = java.nio.file.Paths.get(dest)
-    if (java.nio.file.Files.exists(d) &&
-        !java.nio.file.Files.exists(d.resolve(okMarker))) {
-      Seq("delta", "staged").foreach { sub =>
-        val src = d.resolve(sub)
-        val dst = t.resolve(sub)
-        if (java.nio.file.Files.isDirectory(src) &&
-            !java.nio.file.Files.exists(dst)) {
-          // the isDirectory check is TOCTOU under a concurrent
-          // publisher absorbing the same markerless root — a vanished
-          // source means the sibling took it, which is fine
-          try { java.nio.file.Files.move(src, dst); () }
-          catch { case _: java.nio.file.NoSuchFileException => () }
-        }
-      }
-      deleteRec(d)
-    }
-    try {
-      java.nio.file.Files.createDirectories(d.getParent)
-      java.nio.file.Files.move(t, d,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } catch {
-      // FileSystemException is the common parent of FileAlreadyExists/
-      // DirectoryNotEmpty/AccessDenied — and ALSO what the JDK's unix
-      // provider actually throws for a rename onto a non-empty dir
-      // (ENOTEMPTY surfaces as the generic parent, not
-      // DirectoryNotEmptyException; the narrower list this replaces
-      // let a real lost race propagate)
-      case e: java.nio.file.FileSystemException =>
-        // Possible race loser: another process won the final rename.
-        // But FileSystemException also covers persistent non-race
-        // failures (AtomicMoveNotSupportedException/EXDEV when
-        // indexRoot spans mounts, I/O errors) — taking the loser path
-        // there would silently delete the fresh build and loop
-        // forever. Only treat it as a lost race when the winner's
-        // marker is actually visible at dest; rethrow otherwise so the
-        // real failure surfaces to the caller.
-        if (!java.nio.file.Files.exists(d.resolve(okMarker))) throw e
-        // Confirmed loser: before discarding our redundant build, hand
-        // BACK the committed delta generations / staged attributions
-        // tmp absorbed from the markerless root above — the winner's
-        // fresh dir does not contain them, and deleting them with tmp
-        // would permanently lose every admitted doc (the exact "no
-        // admitted doc is ever lost" contract the absorb step exists
-        // to keep)
-        restoreSubtrees(t, d)
-        deleteRec(t)
+    GenerationStore.ensure(
+      textIndexDirFor(docsPath, threshold, maxDfFrac, baseMod, buckets, famTag),
+      GenerationStore.pristineDirFor(docsPath, textKey(threshold, maxDfFrac,
+        buckets) + (if (baseMod == 2) "" else s"|mod$baseMod"))) {
+      textRoot(graft.Tables.documents(spark, sfDir)
+        .filter(col("doc_id") % baseMod === 0), _, threshold, maxDfFrac, buckets)
     }
   }
-
-  /** Move tmp's `delta/` and `staged/` children into the winning dest,
-    * per-generation, skipping any the dest already has (the winner may
-    * have absorbed some itself). Every child is an atomically-published
-    * self-contained directory (marker inside), so a per-child move is
-    * safe under concurrency: losers of a per-child race skip. */
-  private def restoreSubtrees(t: java.nio.file.Path,
-                              d: java.nio.file.Path): Unit =
-    Seq("delta", "staged").foreach { sub =>
-      val src = t.resolve(sub)
-      if (java.nio.file.Files.isDirectory(src)) {
-        val s = java.nio.file.Files.list(src)
-        try {
-          val it = s.iterator()
-          while (it.hasNext) {
-            val child = it.next()
-            val dst = d.resolve(sub).resolve(child.getFileName)
-            if (!java.nio.file.Files.exists(dst)) {
-              try {
-                java.nio.file.Files.createDirectories(dst.getParent)
-                java.nio.file.Files.move(child, dst)
-                ()
-              } catch {
-                case _: java.nio.file.FileAlreadyExistsException |
-                     _: java.nio.file.NoSuchFileException => ()
-              }
-            }
-          }
-        } finally s.close()
-      }
-    }
-
-  /** Delete superseded index generations (same corpus path, different
-    * key — old mtime or params). Keeps the store bounded at one live
-    * generation per (corpus, parameter set). */
-  private def sweepStale(docsPath: String, keep: String): Unit = {
-    val root = java.nio.file.Paths.get(indexRoot)
-    if (!java.nio.file.Files.exists(root)) return
-    val keepName = java.nio.file.Paths.get(keep).getFileName.toString
-    // sweep ONLY superseded generations of the same (corpus, parameter
-    // family) — `{path}-{family}-` — never a sibling parameterization
-    val prefix = keepName.split("-").take(2).mkString("-") + "-"
-    val s = java.nio.file.Files.list(root)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val child = it.next()
-        val name = child.getFileName.toString
-        if (name.startsWith(prefix) && name != keepName) deleteRec(child)
-      }
-    } finally s.close()
-    // crashed builds leave orphans under .tmp — reap only ones old
-    // enough (6h) that no live process can still be writing them
-    val tmpRoot = root.resolve(".tmp")
-    if (java.nio.file.Files.isDirectory(tmpRoot)) {
-      val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-      val ts = java.nio.file.Files.list(tmpRoot)
-      try {
-        val it = ts.iterator()
-        while (it.hasNext) {
-          val child = it.next()
-          if (java.nio.file.Files.getLastModifiedTime(child).toMillis < cutoff)
-            deleteRec(child)
-        }
-      } finally ts.close()
-    }
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) deleteRec(it.next())
-      } finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
-    ()
-  }
-
-  // ---- delta generations: admitted batches folded into the index ----
-
-  /** All live roots of a text index: the base generation plus every
-    * COMMITTED delta generation (marker present, non-empty), sorted for
-    * deterministic union order. A generation without its marker (a
-    * crashed append) is invisible — appends are atomic at the marker. */
-  private[operators] def indexRoots(dir: String): Seq[String] = {
-    val delta = java.nio.file.Paths.get(dir, "delta")
-    val gens =
-      if (!java.nio.file.Files.isDirectory(delta)) Seq.empty[String]
-      else {
-        val s = java.nio.file.Files.list(delta)
-        try {
-          val b = scala.collection.mutable.ArrayBuffer.empty[String]
-          val it = s.iterator()
-          while (it.hasNext) {
-            val g = it.next()
-            val m = g.resolve(okMarker)
-            if (java.nio.file.Files.exists(m) &&
-              !new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
-                .contains("\"rows\":0")) b += g.toString
-          }
-          b.sorted.toSeq
-        } finally s.close()
-      }
-    dir +: gens
-  }
-
-  /** Fold an ADMITTED batch into the index as a new delta generation —
-    * the maintenance half of the ingest loop (build → probe → admit →
-    * append), so later probes reject against base ∪ everything admitted
-    * so far without any rebuild. Signatures are computed under the
-    * index's FROZEN hot set (df-at-build-time: the persisted base
-    * signatures are only valid under it, so admitted docs must use it
-    * too — the hot set refreshes at snapshot cadence via a rebuild,
-    * which is also when a deployment compacts deltas into the base).
-    * IDEMPOTENT per `genKey`: a committed generation (marker present)
-    * is never re-appended — re-running a lifecycle query cannot
-    * duplicate rows — and the marker is written LAST, so a crashed
-    * append leaves an invisible, harmless partial directory. */
-  /** True iff the generation for `genKey` has been committed (marker
-    * present) — callers can skip the whole probe-and-fold round, not
-    * just the fold. */
-  def generationCommitted(dir: String, genKey: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(
-      s"$dir/delta/${md5hex(genKey).take(16)}", okMarker))
 
   // ---- frozen per-root metadata: read once per committed root ------
   // (hot set, IVF centroids — why they are frozen: module doc)
-
-  /** Identity of a root's committed marker: file key (device + inode),
-    * mtime and ctime. Every publish of a root — build, hardlink clone of
-    * a pristine snapshot, compaction's marker rewrite — creates a new
-    * marker file or a new link to one, which changes the ctime at least;
-    * None while the root is uncommitted. */
-  private def markerStamp(dir: String): Option[String] = {
-    val m = java.nio.file.Paths.get(dir, okMarker)
-    try {
-      val a = java.nio.file.Files.readAttributes(m,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val ctime =
-        try java.nio.file.Files.getAttribute(m, "unix:ctime").toString
-        catch {
-          case _: UnsupportedOperationException |
-               _: IllegalArgumentException => ""
-        }
-      Some(s"${a.fileKey}|${a.lastModifiedTime}|$ctime")
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** The index family of a root dir: its `{path}-{family}` name prefix
-    * (see [[dirFor]]), under the same parent. Generations of one corpus
-    * and parameter set share it. */
-  private def familyOf(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir)
-    val name = p.getFileName.toString.split("-").take(2).mkString("-")
-    Option(p.getParent).fold(name)(par => s"$par/$name")
-  }
-
-  /** Per-process cache of one frozen per-root value, read by `read` on a
-    * miss. An entry is valid for one (root dir, [[markerStamp]]): a
-    * rebuilt root is re-read, and an uncommitted root is never cached.
-    * One entry per index family — a newer corpus generation replaces
-    * its predecessor's entry — so a long-lived process over a changing
-    * corpus holds one entry per family it probes, not one per
-    * generation. Cached arrays are shared: callers must not mutate. */
-  private[operators] final class FrozenMeta[A](read: (SparkSession, String) => A) {
-    private val byFamily =
-      new java.util.concurrent.ConcurrentHashMap[String, (String, String, A)]()
-    private val misses = new java.util.concurrent.atomic.AtomicLong()
-
-    def apply(spark: SparkSession, dir: String): A = markerStamp(dir) match {
-      case None => misses.incrementAndGet(); read(spark, dir)
-      case Some(stamp) =>
-        val fam = familyOf(dir)
-        val hit = byFamily.get(fam)
-        if (hit != null && hit._1 == dir && hit._2 == stamp) hit._3
-        else {
-          misses.incrementAndGet()
-          val v = read(spark, dir)
-          byFamily.put(fam, (dir, stamp, v))
-          v
-        }
-    }
-
-    /** Reads so far (cache misses). */
-    def reads: Long = misses.get()
-    def entries: Int = byFamily.size
-    def holds(dir: String): Boolean =
-      Option(byFamily.get(familyOf(dir))).exists(_._1 == dir)
-  }
-
   /** A text root's template-shingle hot set. */
-  private[operators] val hotSets = new FrozenMeta[Array[Long]](
+  private[operators] val hotSets = new GenerationStore.FrozenMeta[Array[Long]](
     (spark, dir) => readSub(spark, dir, "hot").collect().map(_.getLong(0)))
 
   /** An emb root's centroid summary (qv, n2), in centroid-index order. */
-  private[operators] val centroidSets = new FrozenMeta[Array[(Array[Long], Long)]](
+  private[operators] val centroidSets = new GenerationStore.FrozenMeta[Array[(Array[Long], Long)]](
     (spark, dir) => {
       import spark.implicits._
       readSub(spark, dir, "centroids").as[(Int, Array[Long], Long)].collect()
@@ -725,6 +272,15 @@ object AdmissionIndex {
         Dedup.permMinsUdf(b * r)(col("hset")).as("sig"))
   }
 
+  /** Fold an ADMITTED batch into the index as a new delta generation —
+    * the maintenance half of the ingest loop (build → probe → admit →
+    * append), so later probes reject against base ∪ everything admitted
+    * so far without any rebuild. Signatures are computed under the
+    * index's FROZEN hot set (df-at-build-time: the persisted base
+    * signatures are only valid under it, so admitted docs must use it
+    * too — the hot set refreshes at snapshot cadence via a rebuild,
+    * which is also when a deployment compacts deltas into the base).
+    * Idempotent per `genKey` ([[GenerationStore.appendGeneration]]). */
   def appendGeneration(admitted: DataFrame, dir: String, genKey: String,
                        threshold: Double = Dedup.DefaultThreshold): Unit = {
     val signed = signedBatch(admitted, dir, threshold)
@@ -737,57 +293,58 @@ object AdmissionIndex {
     * [[signedBatch]] shape, normally the probe's own signed input
     * anti-joined against its rejects) into the index as a committed
     * generation, skipping the re-shingle/re-sign the plain
-    * [[appendGeneration]] pays. Same marker/idempotence contract. */
+    * [[appendGeneration]] pays. Same idempotence contract. */
   def appendGenerationSigned(signed: DataFrame, dir: String, genKey: String,
-                             threshold: Double = Dedup.DefaultThreshold): Unit =
-    synchronized {
-      val gdir = s"$dir/delta/${md5hex(genKey).take(16)}"
-      if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(gdir, okMarker))) return
-      val (b, r) = Dedup.lshBanding(threshold)
-      val (bandBuckets, docBuckets) = readBucketCounts(dir)
-      // written to a private tmp dir, marker LAST inside it, then one
-      // atomic rename — same cross-process publish protocol as the
-      // base build (a concurrent same-genKey appender loses cleanly)
-      val tmp = buildTmpDir(gdir)
+                             threshold: Double = Dedup.DefaultThreshold): Unit = {
+    val (b, r) = Dedup.lshBanding(threshold)
+    GenerationStore.appendGeneration(dir, genKey) { tmp =>
       val rows = signed.count()
-      if (rows > 0) {
-        signed
-          .withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(docBuckets)))
-          .repartition(col("doc_bucket"))
-          .write.mode("overwrite").partitionBy("doc_bucket")
-          .parquet(s"$tmp/hsets")
-        signed
-          .select(col("doc_id"),
-            explode(expr(s"sequence(0, ${b - 1})")).as("band"), col("sig"))
-          .select(col("doc_id"), expr(bandKeyExpr("sig", r)).as("band_key"))
-          .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
-          .repartition(col("band_bucket"))
-          .write.mode("overwrite").partitionBy("band_bucket")
-          .parquet(s"$tmp/bands")
-      } else java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tmp))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, okMarker),
-        s"""{"genKey":${graft.Verify.jsonQuote(genKey)},"rows":$rows,"version":$FormatVersion}
-           |""".stripMargin.getBytes("UTF-8"))
-      publish(tmp, gdir)
+      if (rows > 0) writeSigned(signed, tmp, b, r, readBucketCounts(dir))
+      rows
     }
+  }
 
   private def bandKeyExpr(sigCol: String, r: Int): String = {
     val parts = (0 until r).map(k => s"$sigCol[band*$r+$k]").mkString(", ")
     s"concat_ws('_', band, $parts)"
   }
 
-  /** One linear pass over the base corpus → the three persisted tables.
-    * The shingle stage is persisted for its three consumers (hot-set
-    * aggregation, signatures via the filtered view, and the hset sink)
-    * and released eagerly — same lifecycle discipline as
-    * [[Dedup.minhashPairsPlan]]. */
+  /** A signed frame's band rows: (doc_id, band_key, band_bucket). */
+  private def bandRows(sig: DataFrame, b: Int, r: Int,
+                       bandBuckets: Int): DataFrame =
+    sig
+      .select(col("doc_id"),
+        explode(expr(s"sequence(0, ${b - 1})")).as("band"), col("sig"))
+      .select(col("doc_id"), expr(bandKeyExpr("sig", r)).as("band_key"))
+      .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
+
+  /** A signed frame's `hsets` and `bands` sub-tables, written into `out`
+    * under the (bandBuckets, docBuckets) layout. */
+  private def writeSigned(sig: DataFrame, out: String, b: Int, r: Int,
+                          buckets: (Int, Int)): Unit = {
+    val (bandBuckets, docBuckets) = buckets
+    GenerationStore.writePartitioned(
+      sig.withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(docBuckets))),
+      "doc_bucket", s"$out/hsets")
+    GenerationStore.writePartitioned(bandRows(sig, b, r, bandBuckets),
+      "band_bucket", s"$out/bands")
+  }
+
+  /** Build a text root at `dir` ([[GenerationStore.build]]). */
   def buildIndex(base: DataFrame, dir: String,
                  threshold: Double = Dedup.DefaultThreshold,
                  maxDfFrac: Double = Dedup.DefaultMaxDfFrac,
-                 buckets: Option[(Int, Int)] = None): Unit = {
+                 buckets: Option[(Int, Int)] = None): Unit =
+    GenerationStore.build(dir)(textRoot(base, _, threshold, maxDfFrac, buckets))
+
+  /** One linear pass over the base corpus → the three persisted tables
+    * in `out`; returns the root marker's fields. The shingle stage is
+    * persisted for its three consumers (hot-set aggregation, signatures
+    * via the filtered view, and the hset sink) and released eagerly —
+    * same lifecycle discipline as [[Dedup.minhashPairsPlan]]. */
+  private def textRoot(base: DataFrame, out: String, threshold: Double,
+                       maxDfFrac: Double,
+                       buckets: Option[(Int, Int)]): Seq[(String, Any)] = {
     val spark = base.sparkSession
     import spark.implicits._
     val (b, r) = Dedup.lshBanding(threshold)
@@ -813,28 +370,11 @@ object AdmissionIndex {
         // anyway, so this count is a cached-column pass, not a rescan
         val (bandBuckets, docBuckets) =
           buckets.getOrElse(bucketCountsFor(sig.count(), b))
-        // repartition by the layout column first: one file per touched
-        // bucket instead of tasks × buckets small files
-        sig
-          .withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(docBuckets)))
-          .repartition(col("doc_bucket"))
-          .write.mode("overwrite").partitionBy("doc_bucket")
-          .parquet(s"$dir/hsets")
-        sig
-          .select(col("doc_id"),
-            explode(expr(s"sequence(0, ${b - 1})")).as("band"), col("sig"))
-          .select(col("doc_id"), expr(bandKeyExpr("sig", r)).as("band_key"))
-          .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
-          .repartition(col("band_bucket"))
-          .write.mode("overwrite").partitionBy("band_bucket")
-          .parquet(s"$dir/bands")
+        writeSigned(sig, out, b, r, (bandBuckets, docBuckets))
         hot.toSeq.toDF("h").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/hot")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, okMarker),
-          s"""{"threshold":$threshold,"maxDfFrac":$maxDfFrac,"b":$b,"r":$r,"bandBuckets":$bandBuckets,"docBuckets":$docBuckets,"version":$FormatVersion}
-             |""".stripMargin.getBytes("UTF-8"))
-        ()
+          .write.mode("overwrite").parquet(s"$out/hot")
+        Seq("threshold" -> threshold, "maxDfFrac" -> maxDfFrac, "b" -> b,
+          "r" -> r, "bandBuckets" -> bandBuckets, "docBuckets" -> docBuckets)
       } finally sig.unpersist(false)
     } finally sh0.unpersist(false)
   }
@@ -892,16 +432,12 @@ object AdmissionIndex {
     graft.functions.GraftFunctions.register(spark)
     val (b, r) = Dedup.lshBanding(threshold)
     val (bandBuckets, docBuckets) = readBucketCounts(dir)
-    val bandsB = signed
-      .select(col("doc_id"),
-        explode(expr(s"sequence(0, ${b - 1})")).as("band"), col("sig"))
-      .select(col("doc_id"), expr(bandKeyExpr("sig", r)).as("band_key"))
-      .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
+    val bandsB = bandRows(signed, b, r, bandBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     locally {
       try {
         val touched = bucketManifest(bandsB, col("band_bucket"))
-        val roots = indexRoots(dir)
+        val roots = GenerationStore.indexRoots(dir)
         val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
         val cand = bandsB.as("x")
           .join(baseBands.as("y"), Seq("band_key"))
@@ -988,7 +524,7 @@ object AdmissionIndex {
       .select(col("a"), col("ha"), col("siga"),
         explode(expr(s"sequence(0, ${b - 1})")).as("band"))
       .withColumn("band_key", expr(bandKeyExpr("siga", r)))
-    val roots = indexRoots(dir)
+    val roots = GenerationStore.indexRoots(dir)
     val baseBands = roots.map(rt => readSub(spark, rt, "bands")
         .select(col("doc_id").as("bb"), col("band_key")))
       .reduce(_.unionByName(_))
@@ -1059,7 +595,7 @@ object AdmissionIndex {
       .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val touched = bucketManifest(bandsB, col("band_bucket"))
-    val roots = indexRoots(dir)
+    val roots = GenerationStore.indexRoots(dir)
     val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
       .select(col("doc_id").as("bb"), col("band_key"))
     val matched = bandsB.join(baseBands, Seq("band_key"))
@@ -1272,7 +808,7 @@ object AdmissionIndex {
         // the touched-bucket manifest: union of every chunk's band
         // buckets, collected once (bounded by the bucket constant)
         val touched = bucketManifest(bandsB, col("band_bucket"))
-        val roots = indexRoots(dir)
+        val roots = GenerationStore.indexRoots(dir)
         val baseBands = prunedUnion(spark, roots, "bands", "band_bucket",
             touched)
           .select(col("doc_id").as("bb"), col("band_key"))
@@ -1286,7 +822,7 @@ object AdmissionIndex {
         m
       } finally { bandsB.unpersist(false); () }
     try {
-      val roots = indexRoots(dir)
+      val roots = GenerationStore.indexRoots(dir)
       val rMatch = (0 until r)
         .map(o => s"siga[j*$r+$o] = sigb[j*$r+$o]").mkString(" AND ")
       val d = threshold / (1.0 + threshold)
@@ -1375,99 +911,50 @@ object AdmissionIndex {
   /** Committed-batch predicate for [[exactlyOnceParquetSink]]'s store —
     * the `skip` argument that makes a replayed committed id free. */
   def sunkCommitted(outDir: String): Long => Boolean = id =>
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outDir, s"batch=$id", okMarker))
+    GenerationStore.committed(s"$outDir/batch=$id")
 
   /** The cross-restart exactly-once sink the stream docs promise
     * (r14 verdict item 6): [[startNearDupStream]] /
     * [[startFrontDoorLifecycleStream]] deliver at-least-once per
     * foreachBatch contract — a sink that must not double-count keys
     * its writes on the batch id, marker-committed exactly like the
-    * generation folds. Each batch lands at `outDir/batch=<id>` via a
-    * same-filesystem tmp dir and one atomic rename, with the marker
-    * written LAST inside the tmp: a crash mid-write leaves an
-    * invisible markerless dir the replay deletes and rewrites; a
-    * committed id is skipped outright, so a replayed batch cannot
-    * duplicate rows (the staged-frame delivery upstream makes the
-    * replayed rows byte-identical anyway — this closes the sink half).
-    * Rows gain a `batch_id` provenance column. Read back the committed
-    * batches with [[readSunk]] — it lists only marker-committed dirs,
-    * so a reader can never observe a half-written batch. Reference
-    * analog: the A12 silent-loss adjudication (worker.py:124–129) this
-    * engine inverts — fail loud or deliver exactly once, never drop.
+    * generation folds ([[GenerationStore.commit]]). Each batch lands at
+    * `outDir/batch=<id>` through a scratch dir beside it (same
+    * filesystem, so the rename stays atomic): a crash mid-write leaves
+    * an invisible markerless dir the replay replaces; a committed id is
+    * skipped outright, so a replayed batch cannot duplicate rows (the
+    * staged-frame delivery upstream makes the replayed rows
+    * byte-identical anyway — this closes the sink half). Rows gain a
+    * `batch_id` provenance column. Read back the committed batches with
+    * [[readSunk]] — it lists only marker-committed dirs, so a reader can
+    * never observe a half-written batch. Reference analog: the A12
+    * silent-loss adjudication (worker.py:124–129) this engine inverts —
+    * fail loud or deliver exactly once, never drop.
     *
     * Concurrency contract: one foreachBatch writer per outDir is the
     * intended deployment (Structured Streaming guarantees it within a
     * query via the checkpoint lock). Same-id races from a SECOND
-    * process (a misconfigured twin pipeline) still resolve safely:
-    * the marker is re-checked immediately before the only destructive
-    * step (so a batch another writer committed between the outer check
-    * and the crashed-dir sweep is never deleted — the r15 TOCTOU
-    * advice), and a lost final rename is absorbed whenever the
-    * winner's marker is visible — caught as FileSystemException, the
-    * actual parent the JDK unix provider throws for ENOTEMPTY (a bare
-    * FileAlreadyExistsException catch missed it, r15 ADVICE). */
+    * process (a misconfigured twin pipeline) resolve as any two racing
+    * publishers do: exactly one rename wins, the loser discards its
+    * copy. */
   def exactlyOnceParquetSink(outDir: String): (DataFrame, Long) => Unit =
-    (df, id) => {
-      val dest = java.nio.file.Paths.get(outDir, s"batch=$id")
-      if (!java.nio.file.Files.exists(dest.resolve(okMarker))) {
-        val tmp = java.nio.file.Paths.get(outDir, ".tmp",
-          s"batch-$id-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    (df, id) =>
+      GenerationStore.commit(s"$outDir/batch=$id",
+          GenerationStore.scratchDir(outDir, s"batch-$id")) { tmp =>
         df.withColumn("batch_id", lit(id))
           .write.mode("overwrite").parquet(s"$tmp/rows")
-        java.nio.file.Files.write(tmp.resolve(okMarker),
-          s"""{"batchId":$id,"sink":true,"version":$FormatVersion}
-             |""".stripMargin.getBytes("UTF-8"))
-        try {
-          java.nio.file.Files.createDirectories(dest.getParent)
-          // re-verify RIGHT before the destructive sweep: a concurrent
-          // writer may have committed this id since the outer check,
-          // and deleting a committed dir would transiently blind
-          // readSunk to a published batch
-          if (java.nio.file.Files.exists(dest.resolve(okMarker))) {
-            deleteRec(tmp) // won by the other writer — ours is redundant
-          } else {
-            // a markerless dest is a crashed prior attempt — remove it
-            // so the atomic rename below can land
-            if (java.nio.file.Files.exists(dest)) deleteRec(dest)
-            java.nio.file.Files.move(tmp, dest,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            ()
-          }
-        } catch {
-          // lost the final rename (surfaces as FileAlreadyExists OR —
-          // on Linux ENOTEMPTY — the generic FileSystemException /
-          // DirectoryNotEmptyException): absorb ONLY when the winner's
-          // marker is actually visible; a persistent non-race failure
-          // (EXDEV, I/O error) must surface, not loop silently
-          case e: java.nio.file.FileSystemException =>
-            if (java.nio.file.Files.exists(dest.resolve(okMarker)))
-              deleteRec(tmp)
-            else throw e
-        }
+        Seq("batchId" -> id, "sink" -> true)
       }
-    }
 
   /** Every batch [[exactlyOnceParquetSink]] has COMMITTED under
     * `outDir` — markerless (crashed) dirs are invisible. Empty frame
     * with no schema is impossible to synthesize here, so at least one
     * committed batch is required. */
   def readSunk(spark: SparkSession, outDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(outDir)
-    val committed = {
-      val s = java.nio.file.Files.list(root)
-      try {
-        val b = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("batch=") &&
-              java.nio.file.Files.exists(p.resolve(okMarker)))
-            b += s"$p/rows"
-        }
-        b.sorted.toSeq
-      } finally s.close()
-    }
+    val committed = Option(new java.io.File(outDir).list()).toSeq.flatten
+      .filter(n => n.startsWith("batch=") &&
+        GenerationStore.committed(s"$outDir/$n"))
+      .map(n => s"$outDir/$n/rows").sorted
     require(committed.nonEmpty, s"no committed batches under $outDir")
     spark.read.parquet(committed: _*)
   }
@@ -1515,7 +1002,7 @@ object AdmissionIndex {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = ensureIndex(spark, sfDir, threshold, maxDfFrac)
     val out = s"$dir/sunk148"
-    deleteRec(java.nio.file.Paths.get(out))
+    GenerationStore.deleteRec(java.nio.file.Paths.get(out))
     // one read of the documents (one schema resolution), filtered per
     // residue
     val docs = graft.Tables.documents(spark, sfDir)
@@ -1583,7 +1070,7 @@ object AdmissionIndex {
     // one probe per ingest — the per-ingest contract — not a re-probe
     // of history (the committed marker already guarantees the fold
     // itself is idempotent; this skips the wasted probe too)
-    if (!generationCommitted(dir, genKey)) {
+    if (!GenerationStore.generationCommitted(dir, genKey)) {
       // sign batch1 ONCE; the probe and the fold both read the cached
       // signed frame — the split ops would shingle+sign the admitted
       // docs a second time (profiled as the dominant per-ingest term)
@@ -1623,98 +1110,32 @@ object AdmissionIndex {
     * markers — IO-only maintenance. No re-shingling, no re-signing:
     * the stored signatures are reused verbatim, so every probe answer
     * is bitwise unchanged (the q138 oracle pins exactly that). What it
-    * buys at scale: [[indexRoots]] unions one scan branch per live
-    * generation into every probe, so N ingests = N small parquet roots
-    * per probe (the axis ADMISSION_SWEEP_GENS measures); compaction
-    * returns the index to single-root shape at pure IO cost — the
-    * cheap maintenance half a deployment runs every K ingests. The HOT
-    * SET stays frozen: refreshing df statistics would invalidate every
-    * stored signature (df-at-build-time, module doc), so a hot-set
-    * refresh is BY DEFINITION the snapshot-cadence rebuild, not
-    * compaction.
-    *
-    * Crash protocol: both merged tables are fully written to a `.tmp`
-    * scratch first; then the root marker comes OFF, the two directory
-    * swaps and the generation demotions run, and the marker is written
-    * back LAST. A crash inside the window leaves a markerless root →
-    * [[ensureIndex]] rebuilds the base tables ([[publish]] MOVES the
-    * root's delta/staged subtrees into the rebuilt dir before deleting
-    * it, so committed-but-not-yet-demoted generations still probe: no
-    * admitted doc is lost on this path — the preservation is load-
-    * bearing; without it the rebuild's recursive delete took the
-    * generations with it). Residual window, documented: a crash AFTER
-    * the swaps and PART-WAY through the demotion loop loses the rows
-    * of generations already demoted in that loop (they live only in
-    * the swapped merged tables, which the rebuild replaces). The loop
-    * is per-generation marker rewrites — metadata-only milliseconds,
-    * vs the seconds-to-minutes merge that the tmp staging fully
-    * covers; a deployment wanting zero window runs compaction as the
-    * snapshot rebuild (which re-derives everything from the corpus).
-    * Generation MARKERS survive demotion (rewritten as `rows:0,
-    * compacted:true`), so [[generationCommitted]] and
-    * [[appendGeneration]]'s per-genKey idempotence hold across
-    * compaction — a replayed lifecycle cannot re-append a compacted
-    * generation. Callers quiesce probes first (driver queries are
-    * sequential; a deployment compacts on the snapshot scheduler that
-    * owns the index, same as rebuilds). Idempotent: no live
-    * generations → no-op. */
+    * buys at scale: [[GenerationStore.indexRoots]] unions one scan
+    * branch per live generation into every probe, so N ingests = N
+    * small parquet roots per probe (the axis ADMISSION_SWEEP_GENS
+    * measures); compaction returns the index to single-root shape at
+    * pure IO cost — the cheap maintenance half a deployment runs every
+    * K ingests. The HOT SET stays frozen: refreshing df statistics
+    * would invalidate every stored signature (df-at-build-time, module
+    * doc), so a hot-set refresh is BY DEFINITION the snapshot-cadence
+    * rebuild, not compaction. Crash protocol and demotion:
+    * [[GenerationStore.compactRoots]]. Callers quiesce probes first
+    * (driver queries are sequential; a deployment compacts on the
+    * snapshot scheduler that owns the index, same as rebuilds).
+    * Idempotent: no live generations → no-op. */
   def compactIndex(spark: SparkSession, dir: String): Unit =
-    compactRoots(spark, dir,
-      Seq("hsets" -> "doc_bucket", "bands" -> "band_bucket"))
+    compact(spark, dir, Seq("hsets" -> "doc_bucket", "bands" -> "band_bucket"))
 
-  /** The shared merge/marker-off/swap/demote/marker-on body behind
-    * [[compactIndex]], [[fpCompactIndex]] and [[embCompactIndex]] (the
-    * r12 ADVICE triplication — the crash protocol now lives in exactly
-    * one place). `subTables` = (name, partition column) per persisted
-    * sub-table; `merge` post-processes each union (identity for the
+  /** [[GenerationStore.compactRoots]] over this tier's `subTables`
+    * ((name, partition column) each): each merged sub-table is the union
+    * of every live root's, post-processed by `merge` (identity for the
     * text/emb tiers; the fp tier re-collapses to min(bid) per fp). */
-  private def compactRoots(spark: SparkSession, dir: String,
+  private def compact(spark: SparkSession, dir: String,
       subTables: Seq[(String, String)],
-      merge: (String, DataFrame) => DataFrame = (_, df) => df): Unit =
-    // dirLock FIRST (the documented dirLock → object-monitor order, so
-    // no cycle with the ensures): a concurrent ensure of the SAME dir
-    // now serializes against the compaction window — without this, an
-    // external caller's ensure could observe the marker-off window
-    // mid-swap, rebuild, and delete the markerless root out from under
-    // the swap (r16 ADVICE item)
-    dirLock(dir).synchronized { synchronized {
-      val gens = indexRoots(dir).drop(1)
-      if (gens.isEmpty) return
-      val roots = dir +: gens
-      val tmp = buildTmpDir(dir)
-      subTables.foreach { case (sub, partCol) =>
-        merge(sub, roots.map(rt => readSub(spark, rt, sub))
-            .reduce(_.unionByName(_)))
-          .repartition(col(partCol))
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"$tmp/$sub")
-      }
-      val rootMarker = java.nio.file.Paths.get(dir, okMarker)
-      val markerBytes = java.nio.file.Files.readAllBytes(rootMarker)
-      java.nio.file.Files.delete(rootMarker) // window opens: crash → rebuild
-      subTables.foreach { case (sub, _) => swapDir(s"$tmp/$sub", s"$dir/$sub") }
-      deleteRec(java.nio.file.Paths.get(tmp))
-      gens.foreach(demoteGeneration)
-      java.nio.file.Files.write(rootMarker, markerBytes) // window closes
-      ()
-    } }
-
-  /** Demote one compacted generation to an empty committed marker —
-    * `rows:0, compacted:true` with the original genKey, so
-    * [[generationCommitted]] and the per-genKey fold idempotence hold
-    * across compaction. */
-  private def demoteGeneration(g: String): Unit = {
-    val gm = java.nio.file.Paths.get(g, okMarker)
-    val genKeyLine = new String(java.nio.file.Files.readAllBytes(gm), "UTF-8")
-    val genKey = "\"genKey\":(\"(?:[^\"\\\\]|\\\\.)*\")".r
-      .findFirstMatchIn(genKeyLine).map(_.group(1)).getOrElse("\"?\"")
-    deleteRec(java.nio.file.Paths.get(g))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(g))
-    java.nio.file.Files.write(gm,
-      s"""{"genKey":$genKey,"rows":0,"compacted":true,"version":$FormatVersion}
-         |""".stripMargin.getBytes("UTF-8"))
-    ()
-  }
+      merge: DataFrame => DataFrame = identity): Unit =
+    GenerationStore.compactRoots(dir, subTables) { (sub, roots) =>
+      merge(roots.map(rt => readSub(spark, rt, sub)).reduce(_.unionByName(_)))
+    }
 
   // ---- compaction cadence: the measured rule, as code ---------------
   //
@@ -1746,7 +1167,8 @@ object AdmissionIndex {
   val DefaultCompactAfterGens = 9
 
   /** Live (non-demoted) delta generations of any index dir. */
-  def liveGenerations(dir: String): Int = indexRoots(dir).size - 1
+  def liveGenerations(dir: String): Int =
+    GenerationStore.indexRoots(dir).size - 1
 
   /** Compact `dir` iff its live generation count has reached
     * `maxGens` — the cadence rule as an executable maintenance hook
@@ -1757,44 +1179,30 @@ object AdmissionIndex {
     * to sequence this against reads. Returns true iff it compacted. */
   def maybeCompact(spark: SparkSession, dir: String,
                    maxGens: Int = DefaultCompactAfterGens): Boolean =
-    // dirLock OUTSIDE the object monitor (the documented lock order;
-    // the dispatched compact*Index re-acquires both reentrantly), so a
-    // concurrent same-dir ensure and this maintenance slot serialize —
-    // the r16 ADVICE interleaving (ensure sees the marker-off window,
-    // rebuilds, deletes the root mid-swap) cannot start
-    dirLock(dir).synchronized { synchronized {
+    // both store locks, family lock first (the dispatched compaction
+    // re-acquires them reentrantly), so a concurrent same-dir ensure
+    // and this maintenance slot serialize
+    GenerationStore.withLocks(dir) {
       if (liveGenerations(dir) < math.max(1, maxGens)) false
       else {
-        val markerPath = java.nio.file.Paths.get(dir, okMarker)
         // A missing root marker means another process holds the
         // compaction window (or the root is mid-publish) — skip this
         // maintenance slot rather than failing the micro-batch; the
         // next slot retries once the window closes.
-        if (!java.nio.file.Files.exists(markerPath)) false
+        val marker =
+          try GenerationStore.readMarker(dir)
+          catch { case _: java.nio.file.NoSuchFileException => Map.empty[String, String] }
+        if (marker.isEmpty) false
         else {
-          val marker =
-            try new String(java.nio.file.Files.readAllBytes(markerPath), "UTF-8")
-            catch { case _: java.nio.file.NoSuchFileException => return false }
-          // Dispatch on the marker's own fields (anchored key matches,
-          // not raw substrings): emb roots record `"kind":"emb"`, fp
-          // roots a numeric `"fpBuckets"` field, text roots neither.
-          val kind = "\"kind\"\\s*:\\s*\"([^\"]+)\"".r
-            .findFirstMatchIn(marker).map(_.group(1))
-          if (kind.contains("emb")) embCompactIndex(spark, dir)
-          else if ("\"fpBuckets\"\\s*:\\s*\\d+".r
-                     .findFirstIn(marker).isDefined) fpCompactIndex(spark, dir)
+          // emb roots record `"kind":"emb"`, fp roots `"fpBuckets"`,
+          // text roots neither
+          if (marker.get("kind").contains("emb")) embCompactIndex(spark, dir)
+          else if (marker.contains("fpBuckets")) fpCompactIndex(spark, dir)
           else compactIndex(spark, dir)
           true
         }
       }
-    } }
-
-  private def swapDir(src: String, dest: String): Unit = {
-    deleteRec(java.nio.file.Paths.get(dest))
-    java.nio.file.Files.move(java.nio.file.Paths.get(src),
-      java.nio.file.Paths.get(dest))
-    ()
-  }
+    }
 
   val admissionLifecycleOracle: String =
     admissionLifecycleOracleAt(Dedup.DefaultThreshold)
@@ -1861,9 +1269,10 @@ object AdmissionIndex {
 
   def embIndexDirFor(embPath: String, centroids: Int,
                      baseMod: Int = 2, famTag: String = ""): String =
-    dirFor(embPath,
-      s"emb|$centroids" + (if (baseMod == 2) "" else s"|m$baseMod") +
-        (if (famTag.isEmpty) "" else s"|f$famTag"))
+    GenerationStore.dirFor(embPath, embKey(centroids, baseMod) + famSuffix(famTag))
+
+  private def embKey(centroids: Int, baseMod: Int): String =
+    s"emb|$centroids" + (if (baseMod == 2) "" else s"|m$baseMod")
 
   /** Build-if-absent for the embedding index; same lifecycle contract
     * as [[ensureIndex]] (incl. the `baseMod` split-convention key —
@@ -1873,30 +1282,29 @@ object AdmissionIndex {
                      centroids: Int = EmbCentroids,
                      baseMod: Int = 2, famTag: String = ""): String = {
     val embPath = s"$sfDir/embeddings.parquet"
-    val dir = embIndexDirFor(embPath, centroids, baseMod, famTag)
-    dirLock(dir).synchronized {
-      val marker = java.nio.file.Paths.get(dir, okMarker)
-      if (!java.nio.file.Files.exists(marker)) {
-        synchronized { sweepStale(embPath, keep = dir) }
-        val base = graft.Tables.embeddings(spark, sfDir)
-          .filter(col("vec_id") % baseMod === 0)
-        // build-to-tmp + atomic publish, like the text/fp ensures: the
-        // in-place build this replaces was the one remaining site where
-        // two racing processes could interleave writes into a live dir,
-        // and where a rebuild of a markerless root lacked the
-        // delta/staged preservation [[publish]] provides
-        val snap = pristineDirFor(embPath,
-          s"emb|$centroids" + (if (baseMod == 2) "" else s"|m$baseMod"))
-        buildOrClone(dir, snap)(embBuildIndex(base, _, centroids))
-      }
+    GenerationStore.ensure(embIndexDirFor(embPath, centroids, baseMod, famTag),
+      GenerationStore.pristineDirFor(embPath, embKey(centroids, baseMod))) {
+      embRoot(graft.Tables.embeddings(spark, sfDir)
+        .filter(col("vec_id") % baseMod === 0), _, centroids)
     }
-    dir
   }
 
-  /** One pass over the base vectors → centroid summary + cell-assigned
-    * quantized vectors, partitioned by cell for probe-time pruning. */
+  /** Build an embedding root at `dir` ([[GenerationStore.build]]). */
   def embBuildIndex(base: DataFrame, dir: String,
-                    centroids: Int = EmbCentroids): Unit = {
+                    centroids: Int = EmbCentroids): Unit =
+    GenerationStore.build(dir)(embRoot(base, _, centroids))
+
+  /** (vec_id, qv, n2, cell) under the broadcast centroid summary. */
+  private def assignCells(q: DataFrame,
+      cents: org.apache.spark.broadcast.Broadcast[Array[(Array[Long], Long)]]): DataFrame =
+    q.select(col("vec_id"), col("qv"), col("n2"),
+      Similarity.ivfCellUdf(cents)(col("qv")).as("cell"))
+
+  /** One pass over the base vectors → centroid summary + cell-assigned
+    * quantized vectors in `out`, partitioned by cell for probe-time
+    * pruning; returns the root marker's fields. */
+  private def embRoot(base: DataFrame, out: String,
+                      centroids: Int): Seq[(String, Any)] = {
     val spark = base.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
@@ -1904,21 +1312,13 @@ object AdmissionIndex {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cents = Similarity.ivfCentroids(q, centroids)
-      val bc = spark.sparkContext.broadcast(cents)
-      q.select(col("vec_id"), col("qv"), col("n2"),
-          Similarity.ivfCellUdf(bc)(col("qv")).as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/cells")
+      GenerationStore.writePartitioned(
+        assignCells(q, spark.sparkContext.broadcast(cents)), "cell", s"$out/cells")
       cents.zipWithIndex
         .map { case ((cqv, cn2), i) => (i, cqv.toSeq, cn2) }.toSeq
         .toDF("idx", "qv", "n2").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, okMarker),
-        s"""{"kind":"emb","centroids":$centroids,"version":$FormatVersion}
-           |""".stripMargin.getBytes("UTF-8"))
-      ()
+        .write.mode("overwrite").parquet(s"$out/centroids")
+      Seq("kind" -> "emb", "centroids" -> centroids)
     } finally q.unpersist(false)
   }
 
@@ -1965,7 +1365,7 @@ object AdmissionIndex {
       // union of base + committed delta generations, partition-pruned
       // to the probed cells — same multi-root shape as the text probe
       val baseCells =
-        prunedUnion(spark, indexRoots(dir), "cells", "cell", touched)
+        prunedUnion(spark, GenerationStore.indexRoots(dir), "cells", "cell", touched)
       probes.as("x").join(baseCells.as("y"), Seq("cell"))
         .select(col("x.vec_id").as("batch_vec"), col("y.vec_id").as("base_vec"),
           expr(Similarity.cosExpr).as("cos"))
@@ -1996,7 +1396,7 @@ object AdmissionIndex {
     val probes = Similarity.quantized(batchVecs)
       .select(col("vec_id"), col("qv"), col("n2"),
         explode(Similarity.ivfProbeUdf(bc, nProbe)(col("qv"))).as("cell"))
-    val baseCells = indexRoots(dir)
+    val baseCells = GenerationStore.indexRoots(dir)
       .map(rt => readSub(spark, rt, "cells"))
       .reduce(_.unionByName(_))
     probes.as("x").join(baseCells.as("y"), Seq("cell"))
@@ -2093,38 +1493,20 @@ object AdmissionIndex {
     * cell ids are only valid under the centroids they were assigned
     * with; a centroid refresh is BY DEFINITION the snapshot-cadence
     * rebuild), so probes need no per-generation centroid logic: every
-    * root's cells table speaks the same cell vocabulary. Same
-    * marker-last tmp-dir atomic-publish protocol and per-genKey
-    * idempotence as the text fold. */
+    * root's cells table speaks the same cell vocabulary. Idempotent per
+    * genKey, like the text fold. */
   def embAppendGeneration(admitted: DataFrame, dir: String,
                           genKey: String): Unit =
-    synchronized {
+    GenerationStore.appendGeneration(dir, genKey) { tmp =>
       val spark = admitted.sparkSession
       graft.functions.GraftFunctions.register(spark)
-      val gdir = s"$dir/delta/${md5hex(genKey).take(16)}"
-      if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(gdir, okMarker))) return
-      val cents = centroidSets(spark, dir)
-      val bc = spark.sparkContext.broadcast(cents)
-      val assigned = Similarity.quantized(admitted)
-        .select(col("vec_id"), col("qv"), col("n2"),
-          Similarity.ivfCellUdf(bc)(col("qv")).as("cell"))
+      val assigned = assignCells(Similarity.quantized(admitted),
+          spark.sparkContext.broadcast(centroidSets(spark, dir)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val tmp = buildTmpDir(gdir)
         val rows = assigned.count()
-        if (rows > 0) {
-          assigned
-            .repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$tmp/cells")
-        } else java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(tmp))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, okMarker),
-          s"""{"genKey":${graft.Verify.jsonQuote(genKey)},"rows":$rows,"version":$FormatVersion}
-             |""".stripMargin.getBytes("UTF-8"))
-        publish(tmp, gdir)
+        if (rows > 0) GenerationStore.writePartitioned(assigned, "cell", s"$tmp/cells")
+        rows
       } finally assigned.unpersist(false)
     }
 
@@ -2133,10 +1515,9 @@ object AdmissionIndex {
     * base cells table (no re-quantization, no re-assignment — the
     * frozen-centroid contract makes stored rows reusable verbatim),
     * generations demote to empty committed markers, probe answers are
-    * bitwise unchanged, re-compaction is a no-op. Same crash protocol:
-    * merge to tmp, root marker OFF, swap, demote, marker LAST. */
+    * bitwise unchanged, re-compaction is a no-op. */
   def embCompactIndex(spark: SparkSession, dir: String): Unit =
-    compactRoots(spark, dir, Seq("cells" -> "cell"))
+    compact(spark, dir, Seq("cells" -> "cell"))
 
   /** q141 driver form — the embedding tier's FULL ingest lifecycle
     * (q137's IVF twin) on a mod-3 split: build (base = vec_id % 3 == 0)
@@ -2173,7 +1554,7 @@ object AdmissionIndex {
     val vecs = graft.Tables.embeddings(spark, sfDir)
     val dir = ensureEmbIndex(spark, sfDir, centroids, baseMod = m)
     val genKey = s"$sfDir|$genTag"
-    if (!generationCommitted(dir, genKey)) {
+    if (!GenerationStore.generationCommitted(dir, genKey)) {
       val batch1 = vecs.filter(col("vec_id") % m === 1)
       val rejected1 = embProbe(batch1, dir, threshold, nProbe)
         .select(col("batch_vec")).distinct()
@@ -2354,66 +1735,51 @@ object AdmissionIndex {
   val FpsPerBucket = 65536L
 
   /** `baseMod` and `famTag` enter the key exactly as in
-    * [[indexDirFor]]: different split conventions / owning lifecycles
-    * are different fp indexes (the mod-2 tag is the historical
-    * spelling, so existing indexes stay valid). */
+    * [[textIndexDirFor]]: different split conventions / owning
+    * lifecycles are different fp indexes. */
   def fpIndexDirFor(docsPath: String, baseMod: Int = 2,
                     famTag: String = ""): String =
-    dirFor(docsPath, s"fp|mod$baseMod" +
-      (if (famTag.isEmpty) "" else s"|f$famTag"))
+    GenerationStore.dirFor(docsPath, s"fp|mod$baseMod" + famSuffix(famTag))
 
-  /** Build-if-absent for the fingerprint index; same key/marker/atomic-
-    * publish contract as [[ensureIndex]], including the `baseMod`
-    * split-convention parameter (base = doc_id % baseMod == 0 — the
-    * composed front-door lifecycle runs at 3/4, q139 at the default 2)
-    * and the `famTag` owning-lifecycle key. */
+  /** Build-if-absent for the fingerprint index; same contract as
+    * [[ensureIndex]], including the `baseMod` split-convention parameter
+    * (base = doc_id % baseMod == 0 — the composed front-door lifecycle
+    * runs at 3/4, q139 at the default 2) and the `famTag` key. */
   def ensureFpIndex(spark: SparkSession, sfDir: String,
                     baseMod: Int = 2, famTag: String = ""): String = {
     val docsPath = s"$sfDir/documents.parquet"
-    val dir = fpIndexDirFor(docsPath, baseMod, famTag)
-    dirLock(dir).synchronized {
-      val marker = java.nio.file.Paths.get(dir, okMarker)
-      if (!java.nio.file.Files.exists(marker)) {
-        synchronized { sweepStale(docsPath, keep = dir) }
-        val base = graft.Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % baseMod === 0)
-        val snap = pristineDirFor(docsPath, s"fp|mod$baseMod")
-        buildOrClone(dir, snap)(buildFpIndexInto(base, _))
-      }
+    GenerationStore.ensure(fpIndexDirFor(docsPath, baseMod, famTag),
+      GenerationStore.pristineDirFor(docsPath, s"fp|mod$baseMod")) {
+      fpRoot(graft.Tables.documents(spark, sfDir)
+        .filter(col("doc_id") % baseMod === 0), _)
     }
-    dir
   }
 
-  /** One pass over the base → the bucketed (fp, bid) table. `bid` is
-    * the LOWEST base doc id per fingerprint — the attribution the front
-    * door emits, folded at build time so a probe never aggregates. */
-  def buildFpIndex(base: DataFrame, dir: String): Unit = {
-    val tmp = buildTmpDir(dir)
-    buildFpIndexInto(base, tmp)
-    publish(tmp, dir)
-  }
+  /** Build a fingerprint root at `dir` ([[GenerationStore.build]]). */
+  def buildFpIndex(base: DataFrame, dir: String): Unit =
+    GenerationStore.build(dir)(fpRoot(base, _))
 
-  /** The build body of [[buildFpIndex]] writing into an UNPUBLISHED
-    * scratch dir (marker last, inside) — the shape [[buildOrClone]]
-    * needs, matching [[buildIndex]]/[[embBuildIndex]]. */
-  private def buildFpIndexInto(base: DataFrame, tmp: String): Unit = {
-    val fps = base
-      .select(fpCol(col("text")).as("fp"), col("doc_id"))
+  /** (fp, bid = lowest doc id per fp) of a batch of docs. */
+  private def fpRows(docs: DataFrame): DataFrame =
+    docs.select(fpCol(col("text")).as("fp"), col("doc_id"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("bid"))
+
+  private def withFpBucket(fps: DataFrame, buckets: Int): DataFrame =
+    fps.withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
+
+  /** One pass over the base → the bucketed (fp, bid) table in `out`;
+    * returns the root marker's fields. `bid` is the LOWEST base doc id
+    * per fingerprint — the attribution the front door emits, folded at
+    * build time so a probe never aggregates. */
+  private def fpRoot(base: DataFrame, out: String): Seq[(String, Any)] = {
+    val fps = fpRows(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val buckets = pow2AtLeast(
         (fps.count() + FpsPerBucket - 1) / FpsPerBucket)
-      fps
-        .withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
-        .repartition(col("fp_bucket"))
-        .write.mode("overwrite").partitionBy("fp_bucket")
-        .parquet(s"$tmp/fps")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, okMarker),
-        s"""{"fpBuckets":$buckets,"version":$FormatVersion}
-           |""".stripMargin.getBytes("UTF-8"))
-      ()
+      GenerationStore.writePartitioned(withFpBucket(fps, buckets),
+        "fp_bucket", s"$out/fps")
+      Seq("fpBuckets" -> buckets)
     } finally fps.unpersist(false)
   }
 
@@ -2445,18 +1811,14 @@ object AdmissionIndex {
       .withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val touched = bucketManifest(bf, col("fp_bucket"))
-    val idx = prunedUnion(spark, indexRoots(dir), "fps", "fp_bucket", touched)
+    val idx = prunedUnion(spark, GenerationStore.indexRoots(dir), "fps", "fp_bucket", touched)
     val out = bf.join(idx.select(col("fp"), col("bid")), Seq("fp"))
       .groupBy(col("doc_id")).agg(min(col("bid")).as("exact_id"))
     (out, () => { bf.unpersist(false); () })
   }
 
-  private def readFpBuckets(dir: String): Int = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, okMarker)), "UTF-8")
-    "\"fpBuckets\":(\\d+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(MinBuckets)
-  }
+  private def readFpBuckets(dir: String): Int =
+    GenerationStore.readMarker(dir).get("fpBuckets").fold(MinBuckets)(_.toInt)
 
   /** Fold ADMITTED docs' fingerprints into the fp index as a committed
     * delta generation — the exact tier's fold, closing the last
@@ -2465,35 +1827,17 @@ object AdmissionIndex {
     * minhash tier cannot catch sub-3-token docs at all). Rows are
     * (fp, bid = lowest admitted doc id per fp WITHIN the generation),
     * bucketed under the ROOT's fpBuckets layout so one pruned scan
-    * vocabulary spans all roots. Same marker-last tmp-dir
-    * atomic-publish protocol and per-genKey idempotence as
+    * vocabulary spans all roots. Idempotent per genKey, like
     * [[appendGeneration]]. */
   def fpAppendGeneration(admitted: DataFrame, dir: String,
                          genKey: String): Unit =
-    synchronized {
-      val gdir = s"$dir/delta/${md5hex(genKey).take(16)}"
-      if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(gdir, okMarker))) return
-      val buckets = readFpBuckets(dir)
-      val fps = admitted
-        .select(fpCol(col("text")).as("fp"), col("doc_id"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("bid"))
-        .withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
+    GenerationStore.appendGeneration(dir, genKey) { tmp =>
+      val fps = withFpBucket(fpRows(admitted), readFpBuckets(dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val tmp = buildTmpDir(gdir)
         val rows = fps.count()
-        if (rows > 0) {
-          fps.repartition(col("fp_bucket"))
-            .write.mode("overwrite").partitionBy("fp_bucket")
-            .parquet(s"$tmp/fps")
-        } else java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(tmp))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, okMarker),
-          s"""{"genKey":${graft.Verify.jsonQuote(genKey)},"rows":$rows,"version":$FormatVersion}
-             |""".stripMargin.getBytes("UTF-8"))
-        publish(tmp, gdir)
+        if (rows > 0) GenerationStore.writePartitioned(fps, "fp_bucket", s"$tmp/fps")
+        rows
       } finally fps.unpersist(false)
     }
 
@@ -2502,12 +1846,10 @@ object AdmissionIndex {
     * the base fps table, re-collapsed to min(bid) per fp (the probe
     * already min-aggregates across roots, so the collapse leaves every
     * probe answer bitwise unchanged), generations demote to empty
-    * committed markers. Same crash protocol: merge to tmp, root marker
-    * OFF, swap, demote, marker LAST. */
+    * committed markers. */
   def fpCompactIndex(spark: SparkSession, dir: String): Unit =
-    compactRoots(spark, dir, Seq("fps" -> "fp_bucket"),
-      merge = (_, df) => df
-        .groupBy(col("fp"), col("fp_bucket")).agg(min(col("bid")).as("bid"))
+    compact(spark, dir, Seq("fps" -> "fp_bucket"),
+      merge = _.groupBy(col("fp"), col("fp_bucket")).agg(min(col("bid")).as("bid"))
         .select(col("fp"), col("bid"), col("fp_bucket")))
 
   /** One incoming batch (odd doc_ids) → per-doc, per-tier reject
@@ -2729,36 +2071,24 @@ object AdmissionIndex {
   // docs self-rejected as exact dups, and the remaining tiers
   // committed EMPTY generations under the same genKey — permanently
   // (caught by this round's review). The fix is to make the round's
-  // attribution itself durable FIRST: it is staged under the text
-  // index dir with the same tmp-dir + marker-last + atomic-publish
-  // protocol, and every fold derives its admitted set from the staged
-  // frame. A replay that finds the stage committed skips the probe
+  // attribution itself durable FIRST: it is committed under the text
+  // index dir's `staged/` ([[GenerationStore]]), and every fold
+  // derives its admitted set from the staged frame. A replay that finds the stage committed skips the probe
   // entirely (immune to whatever subset of folds landed) and re-runs
   // only the idempotent folds; a crash before the stage committed
   // left no fold behind, so the fresh probe is clean. The staged
   // frames are batch-sized (id + tier + match id) and keyed like
   // generations — one per genKey, replay-stable.
 
-  private def stagedDir(dir: String, genKey: String): String =
-    s"$dir/staged/${md5hex(genKey).take(16)}"
-
-  private def stagedCommitted(adir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(adir, okMarker))
-
   /** Publish `att` as the committed round attribution for `adir`;
     * no-op if already committed (a concurrent/replayed stager loses
     * cleanly via the atomic publish). */
   private def stageAttribution(att: DataFrame, adir: String,
-                               genKey: String): Unit = {
-    if (stagedCommitted(adir)) return
-    val tmp = buildTmpDir(adir)
-    att.write.mode("overwrite").parquet(s"$tmp/att")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmp, okMarker),
-      s"""{"genKey":${graft.Verify.jsonQuote(genKey)},"staged":true,"version":$FormatVersion}
-         |""".stripMargin.getBytes("UTF-8"))
-    publish(tmp, adir)
-  }
+                               genKey: String): Unit =
+    GenerationStore.commit(adir, GenerationStore.buildTmpDir(adir)) { tmp =>
+      att.write.mode("overwrite").parquet(s"$tmp/att")
+      Seq("genKey" -> genKey, "staged" -> true)
+    }
 
   private def readStaged(spark: SparkSession, adir: String): DataFrame =
     readSub(spark, adir, "att")
@@ -2807,8 +2137,8 @@ object AdmissionIndex {
       genKey: String, threshold: Double, embThreshold: Double,
       nProbe: Int,
       maxDocsPerBatch: Long = DefaultMaxDocsPerBatch): String = {
-    val adir = stagedDir(dir, genKey)
-    if (!stagedCommitted(adir)) {
+    val adir = GenerationStore.stagedDir(dir, genKey)
+    if (!GenerationStore.committed(adir)) {
       // fresh round: probe (no fold has landed — the stage commits
       // first), stage, fold from the shared signed frame. An oversized
       // batch re-chunks its tier-2 verify INSIDE [[frontDoorProbe]]
@@ -2831,9 +2161,9 @@ object AdmissionIndex {
         foldAdmitted(cached, admitted, Some(signed1), spark, sfDir,
           dir, edir, fdir, genKey, threshold)
       } finally { release(); cached.unpersist(false); () }
-    } else if (!(generationCommitted(fdir, genKey) &&
-                 generationCommitted(dir, genKey) &&
-                 generationCommitted(edir, genKey))) {
+    } else if (!(GenerationStore.generationCommitted(fdir, genKey) &&
+                 GenerationStore.generationCommitted(dir, genKey) &&
+                 GenerationStore.generationCommitted(edir, genKey))) {
       // replay after a partial fold: admitted comes from the staged
       // frame, never from a re-probe
       val admitted = readStaged(spark, adir)
@@ -2926,9 +2256,9 @@ object AdmissionIndex {
     // protocol — the round's attribution is durable BEFORE any fold
     // commits, so a replay after a partial fold never re-probes
     // against the round's own generations
-    if (!(generationCommitted(fdir, genKey) &&
-          generationCommitted(dir, genKey) &&
-          generationCommitted(edir, genKey))) {
+    if (!(GenerationStore.generationCommitted(fdir, genKey) &&
+          GenerationStore.generationCommitted(dir, genKey) &&
+          GenerationStore.generationCommitted(edir, genKey))) {
       probeStageFold(docs.filter(col("doc_id") % m === 1), spark,
         sfDir, dir, edir, fdir, genKey, threshold, embThreshold, nProbe)
       ()

@@ -4,12 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The compaction cadence advisor ([[AdmissionIndex.maybeCompact]] /
-  * [[AdmissionIndex.compactionCadence]]) and the publish() race-loser
-  * recovery: the measured sweep curves must keep deriving the deployed
-  * cadence constant, the advisor must fire exactly at the threshold
-  * with probe answers unchanged, and a lost publish race must hand the
-  * absorbed delta/staged subtrees back to the winner instead of
-  * deleting them. */
+  * [[AdmissionIndex.compactionCadence]]): the measured sweep curves must
+  * keep deriving the deployed cadence constant, and the advisor must
+  * fire exactly at the threshold with probe answers unchanged. */
 class CompactionPolicySpec extends SparkSpec {
   import spark.implicits._
 
@@ -131,71 +128,6 @@ class CompactionPolicySpec extends SparkSpec {
     assert(AdmissionIndex.liveGenerations(dir) == 0)
     assert(pairs() == Set((2001L, 1001L)),
       "text compaction changed the probe answer")
-  }
-
-  // ---- publish(): the race-loser hand-back -------------------------
-
-  test("publish race loser returns absorbed delta/staged generations " +
-    "to the winning dest instead of deleting them") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-publish-race").toString
-    val dest = java.nio.file.Paths.get(root, "idx")
-    val tmp = java.nio.file.Paths.get(root, "tmp-build")
-    // the winner's published dir: marker present, one delta of its own
-    java.nio.file.Files.createDirectories(dest.resolve("delta/aaaa"))
-    java.nio.file.Files.write(dest.resolve("_GRAFT_INDEX_OK"),
-      "{\"v\":1}\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      dest.resolve("delta/aaaa").resolve("_GRAFT_INDEX_OK"),
-      "{\"genKey\":\"a\",\"rows\":1}\n".getBytes("UTF-8"))
-    // the loser's tmp: its own build output PLUS the delta/staged
-    // subtrees it absorbed from the markerless root it replaced — one
-    // generation the winner also has (skip) and one it does not (move)
-    java.nio.file.Files.createDirectories(tmp.resolve("delta/aaaa"))
-    java.nio.file.Files.createDirectories(tmp.resolve("delta/bbbb"))
-    java.nio.file.Files.createDirectories(tmp.resolve("staged/cccc"))
-    java.nio.file.Files.write(
-      tmp.resolve("delta/bbbb").resolve("_GRAFT_INDEX_OK"),
-      "{\"genKey\":\"b\",\"rows\":7}\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      tmp.resolve("staged/cccc").resolve("_GRAFT_INDEX_OK"),
-      "{\"genKey\":\"c\",\"staged\":true}\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(tmp.resolve("_GRAFT_INDEX_OK"),
-      "{\"v\":1}\n".getBytes("UTF-8"))
-    // dest exists (the winner won the rename race) → the ATOMIC_MOVE
-    // fails → the loser's catch branch must hand the subtrees back
-    AdmissionIndex.publish(tmp.toString, dest.toString)
-    assert(!java.nio.file.Files.exists(tmp), "loser tmp must be deleted")
-    assert(java.nio.file.Files.exists(
-      dest.resolve("delta/bbbb").resolve("_GRAFT_INDEX_OK")),
-      "absorbed committed generation must reach the winner")
-    assert(java.nio.file.Files.exists(
-      dest.resolve("staged/cccc").resolve("_GRAFT_INDEX_OK")),
-      "absorbed staged attribution must reach the winner")
-    assert(java.nio.file.Files.exists(
-      dest.resolve("delta/aaaa").resolve("_GRAFT_INDEX_OK")),
-      "the winner's own generation must survive untouched")
-  }
-
-  test("publish rethrows a non-race FileSystemException (no winner " +
-    "marker at dest) and keeps the fresh build instead of deleting it") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-publish-norace").toString
-    val tmp = java.nio.file.Paths.get(root, "tmp-build")
-    java.nio.file.Files.createDirectories(tmp)
-    java.nio.file.Files.write(tmp.resolve("_GRAFT_INDEX_OK"),
-      "{\"v\":1}\n".getBytes("UTF-8"))
-    // dest's PARENT is a regular file: createDirectories throws a
-    // FileSystemException, and no winner marker can possibly exist —
-    // the persistent-failure shape the loser path must NOT swallow
-    val parentFile = java.nio.file.Paths.get(root, "parentfile")
-    java.nio.file.Files.write(parentFile, "x".getBytes("UTF-8"))
-    val dest = parentFile.resolve("idx")
-    intercept[java.nio.file.FileSystemException] {
-      AdmissionIndex.publish(tmp.toString, dest.toString)
-    }
-    assert(java.nio.file.Files.exists(tmp.resolve("_GRAFT_INDEX_OK")),
-      "a non-race failure must leave the fresh build intact")
   }
 
   test("maybeCompact skips the maintenance slot (returns false) when " +

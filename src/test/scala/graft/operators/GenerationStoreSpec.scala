@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The admission indexes' on-disk protocol, pinned byte for byte: the
-  * exact `_GRAFT_INDEX_OK` text of every marker kind and the names of
-  * index, generation and staged dirs. A synthetic corpus in a temp dir
+/** The admission indexes' on-disk protocol ([[GenerationStore]]), pinned
+  * byte for byte: the exact `_GRAFT_INDEX_OK` text of every marker kind
+  * and the names of index, generation and staged dirs. A synthetic corpus in a temp dir
   * goes through every writer of all three tiers: the base builds, one
   * composed probe-stage-fold round, an empty fold, a compaction and a
   * sink batch. The genKey carries a quote, a backslash and a tab, so the
@@ -92,6 +92,18 @@ class GenerationStoreSpec extends SparkSpec {
     Seq(root, sfDir).foreach(d => rm(new java.io.File(d)))
   }
 
+  test("the marker codec round-trips every quoted genKey it writes") {
+    val dir = Files.createTempDirectory("graft-marker-codec").toString
+    for (k <- Seq("plain", "q\"uote", "back\\slash", "tab\tnl\ncr\r",
+                  "ctl\u0001\u001f", "unicode é ✓", "brace}, \"rows\":0")) {
+      Files.write(Paths.get(dir, marker), GenerationStore.encode("genKey" -> k,
+        "rows" -> 3L, "staged" -> true))
+      assert(GenerationStore.readMarker(dir) ==
+        Map("genKey" -> k, "rows" -> "3", "staged" -> "true", "version" -> "3"))
+    }
+    rm(new java.io.File(dir))
+  }
+
   test("golden bytes: index dir names of every tier and parameterization") {
     val p = "/graft/golden/absent/documents.parquet"
     val e = "/graft/golden/absent/embeddings.parquet"
@@ -115,6 +127,90 @@ class GenerationStoreSpec extends SparkSpec {
       "6d12d27c9e20-a1575e97-2429359d94e7e8eb",
       "56e3b9b5b0ca-b0c94afb-cdde97438cb91b93",
       "56e3b9b5b0ca-a7e5e98a-67870808649f11e3"))
+  }
+
+  test("build locks are keyed by index family: ensuring two corpus " +
+    "generations of one family leaves one lock entry") {
+    val sfDir = corpus()
+    val d1 = AI.ensureFpIndex(spark, sfDir)
+    // a new corpus manifest is a new generation: same path and
+    // parameters (same family), new staleness key (new dir)
+    Files.write(Paths.get(sfDir, "documents.parquet", "_GRAFT_MANIFEST"),
+      "generation 2".getBytes("UTF-8"))
+    val d2 = AI.ensureFpIndex(spark, sfDir)
+    assert(d1 != d2)
+    val pathKey = Paths.get(d2).getFileName.toString.split("-")(0)
+    assert(GenerationStore.lockedFamilies.filter(_.contains(pathKey)) ==
+      Set(GenerationStore.familyOf(d2)))
+    Seq(GenerationStore.indexRoot, s"${GenerationStore.indexRoot}/.pristine")
+      .flatMap(r => Option(new java.io.File(r).listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith(pathKey + "-")).foreach(rm)
+    rm(new java.io.File(sfDir))
+  }
+
+  // ---- publish(): the race-loser hand-back -------------------------
+
+  test("publish race loser returns absorbed delta/staged generations " +
+    "to the winning dest instead of deleting them") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-publish-race").toString
+    val dest = java.nio.file.Paths.get(root, "idx")
+    val tmp = java.nio.file.Paths.get(root, "tmp-build")
+    // the winner's published dir: marker present, one delta of its own
+    java.nio.file.Files.createDirectories(dest.resolve("delta/aaaa"))
+    java.nio.file.Files.write(dest.resolve("_GRAFT_INDEX_OK"),
+      "{\"v\":1}\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      dest.resolve("delta/aaaa").resolve("_GRAFT_INDEX_OK"),
+      "{\"genKey\":\"a\",\"rows\":1}\n".getBytes("UTF-8"))
+    // the loser's tmp: its own build output PLUS the delta/staged
+    // subtrees it absorbed from the markerless root it replaced — one
+    // generation the winner also has (skip) and one it does not (move)
+    java.nio.file.Files.createDirectories(tmp.resolve("delta/aaaa"))
+    java.nio.file.Files.createDirectories(tmp.resolve("delta/bbbb"))
+    java.nio.file.Files.createDirectories(tmp.resolve("staged/cccc"))
+    java.nio.file.Files.write(
+      tmp.resolve("delta/bbbb").resolve("_GRAFT_INDEX_OK"),
+      "{\"genKey\":\"b\",\"rows\":7}\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      tmp.resolve("staged/cccc").resolve("_GRAFT_INDEX_OK"),
+      "{\"genKey\":\"c\",\"staged\":true}\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(tmp.resolve("_GRAFT_INDEX_OK"),
+      "{\"v\":1}\n".getBytes("UTF-8"))
+    // dest exists (the winner won the rename race) → the ATOMIC_MOVE
+    // fails → the loser's catch branch must hand the subtrees back
+    GenerationStore.publish(tmp.toString, dest.toString)
+    assert(!java.nio.file.Files.exists(tmp), "loser tmp must be deleted")
+    assert(java.nio.file.Files.exists(
+      dest.resolve("delta/bbbb").resolve("_GRAFT_INDEX_OK")),
+      "absorbed committed generation must reach the winner")
+    assert(java.nio.file.Files.exists(
+      dest.resolve("staged/cccc").resolve("_GRAFT_INDEX_OK")),
+      "absorbed staged attribution must reach the winner")
+    assert(java.nio.file.Files.exists(
+      dest.resolve("delta/aaaa").resolve("_GRAFT_INDEX_OK")),
+      "the winner's own generation must survive untouched")
+  }
+
+  test("publish rethrows a non-race FileSystemException (no winner " +
+    "marker at dest) and keeps the fresh build instead of deleting it") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-publish-norace").toString
+    val tmp = java.nio.file.Paths.get(root, "tmp-build")
+    java.nio.file.Files.createDirectories(tmp)
+    java.nio.file.Files.write(tmp.resolve("_GRAFT_INDEX_OK"),
+      "{\"v\":1}\n".getBytes("UTF-8"))
+    // dest's PARENT is a regular file: createDirectories throws a
+    // FileSystemException, and no winner marker can possibly exist —
+    // the persistent-failure shape the loser path must NOT swallow
+    val parentFile = java.nio.file.Paths.get(root, "parentfile")
+    java.nio.file.Files.write(parentFile, "x".getBytes("UTF-8"))
+    val dest = parentFile.resolve("idx")
+    intercept[java.nio.file.FileSystemException] {
+      GenerationStore.publish(tmp.toString, dest.toString)
+    }
+    assert(java.nio.file.Files.exists(tmp.resolve("_GRAFT_INDEX_OK")),
+      "a non-race failure must leave the fresh build intact")
   }
 
   private def rm(f: java.io.File): Unit = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 /** The declared index schemas ([[AdmissionIndex.SubTableSchemas]]) are
   * the schemas the writers produce, and the frozen per-root metadata
-  * cache ([[AdmissionIndex.FrozenMeta]]) follows root rebuilds and
+  * cache ([[GenerationStore.FrozenMeta]]) follows root rebuilds and
   * corpus generations. One synthetic corpus in a temp dir goes through
   * the composed front-door lifecycle (q143's shape): all three tiers are
   * built and one admitted batch is folded into each. */
@@ -75,7 +75,7 @@ class IndexSchemaSpec extends SparkSpec {
     val (dir, edir, fdir) = dirs
     Seq(dir -> Seq("hsets", "bands"), edir -> Seq("cells"), fdir -> Seq("fps"))
       .foreach { case (ix, subs) =>
-        val roots = AI.indexRoots(ix)
+        val roots = GenerationStore.indexRoots(ix)
         assert(roots.size == 2, s"expected base + one folded generation: $roots")
         for (rt <- roots; sub <- subs) checkSchema(rt, sub)
       }
@@ -130,7 +130,7 @@ class IndexSchemaSpec extends SparkSpec {
   override def afterAll(): Unit =
     try {
       if (pathKeys.nonEmpty) {
-        Seq(AI.indexRoot, s"${AI.indexRoot}/.pristine").foreach { r =>
+        Seq(GenerationStore.indexRoot, s"${GenerationStore.indexRoot}/.pristine").foreach { r =>
           Option(new java.io.File(r).listFiles()).toSeq.flatten
             .filter(f => pathKeys.exists(f.getName.startsWith)).foreach(rm)
         }
