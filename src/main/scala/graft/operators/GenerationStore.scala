@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -154,7 +156,7 @@ object GenerationStore {
     Option(p.getParent).fold(name)(par => s"$par/$name")
   }
 
-  def generationDir(dir: String, genKey: String): String =
+  private def generationDir(dir: String, genKey: String): String =
     s"$dir/delta/${md5hex(genKey).take(16)}"
 
   def stagedDir(dir: String, genKey: String): String =
@@ -244,11 +246,16 @@ object GenerationStore {
             (write: String => Seq[(String, Any)]): Unit =
     if (!committed(dest)) {
       val tmp = scratch
-      val fields = write(tmp)
-      Files.createDirectories(Paths.get(tmp))
-      putMarker(tmp, encode(fields: _*))
+      writeInto(tmp)(write)
       publish(tmp, dest)
     }
+
+  /** Run `write` into `tmp`, then put the marker it returns LAST. */
+  private def writeInto(tmp: String)(write: String => Seq[(String, Any)]): Unit = {
+    val fields = write(tmp)
+    Files.createDirectories(Paths.get(tmp))
+    putMarker(tmp, encode(fields: _*))
+  }
 
   /** Build a root at `dir` through scratch beside it (same filesystem,
     * so the rename stays atomic); a committed `dir` is kept. */
@@ -340,14 +347,10 @@ object GenerationStore {
 
   /** The children of a dir; empty when it is not one. */
   private def list(p: Path): Seq[Path] =
-    if (!Files.isDirectory(p)) Seq.empty
+    if (!Files.isDirectory(p)) Nil
     else {
       val s = Files.list(p)
-      try {
-        val b = Seq.newBuilder[Path]
-        s.forEach(c => b += c)
-        b.result()
-      } finally s.close()
+      try s.iterator.asScala.toList finally s.close()
     }
 
   /** Delete the superseded siblings of `keep`: same parent, same
@@ -366,25 +369,16 @@ object GenerationStore {
     * old layout), then reap crashed builds' scratch dirs old enough (6h)
     * that no live process can still be writing them. */
   private def sweepStale(keep: String): Unit = {
-    val root = Paths.get(indexRoot)
-    if (Files.exists(root)) {
-      sweepSiblings(Paths.get(keep))
-      val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-      list(root.resolve(".tmp")).foreach { c =>
-        if (Files.getLastModifiedTime(c).toMillis < cutoff) deleteRec(c)
-      }
+    sweepSiblings(Paths.get(keep))
+    val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
+    list(Paths.get(indexRoot, ".tmp")).foreach { c =>
+      if (Files.getLastModifiedTime(c).toMillis < cutoff) deleteRec(c)
     }
   }
 
   def deleteRec(p: Path): Unit = {
     list(p).foreach(deleteRec)
     Files.deleteIfExists(p)
-    ()
-  }
-
-  private def swapDir(src: String, dest: String): Unit = {
-    deleteRec(Paths.get(dest))
-    Files.move(Paths.get(src), Paths.get(dest))
     ()
   }
 
@@ -410,11 +404,7 @@ object GenerationStore {
     locks.computeIfAbsent(familyOf(dir), _ => new Object)
 
   /** The families that own a lock so far. */
-  private[operators] def lockedFamilies: Set[String] = {
-    val b = Set.newBuilder[String]
-    locks.keySet.forEach(k => b += k)
-    b.result()
-  }
+  private[operators] def lockedFamilies: Set[String] = locks.keySet.asScala.toSet
 
   /** Run `body` under `dir`'s family lock, then this object's monitor. */
   def withLocks[A](dir: String)(body: => A): A =
@@ -449,9 +439,7 @@ object GenerationStore {
        catch { case scala.util.control.NonFatal(_) =>
          deleteRec(Paths.get(tmp)); false })
     if (!cloned) {
-      val fields = build(tmp)
-      Files.createDirectories(Paths.get(tmp))
-      putMarker(tmp, encode(fields: _*))
+      writeInto(tmp)(build)
       // publish the snapshot FIRST (from hardlinks of the fresh build),
       // then the family dir gets the build itself; losing a snapshot
       // race to a sibling process is fine (publish resolves it)
@@ -520,7 +508,10 @@ object GenerationStore {
         val rootMarker = Paths.get(dir, Marker)
         val markerBytes = Files.readAllBytes(rootMarker)
         Files.delete(rootMarker) // window opens: crash → rebuild
-        subTables.foreach { case (sub, _) => swapDir(s"$tmp/$sub", s"$dir/$sub") }
+        subTables.foreach { case (sub, _) =>
+          deleteRec(Paths.get(dir, sub))
+          Files.move(Paths.get(tmp, sub), Paths.get(dir, sub))
+        }
         deleteRec(Paths.get(tmp))
         roots.tail.foreach(demoteGeneration)
         putMarker(dir, markerBytes) // window closes
