@@ -67,7 +67,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
   *    are written once by the build (df- and centroids-at-build-time);
   *    folds add delta generations and compaction rewrites only `hsets`/
   *    `bands`/`fps`/`cells`. Each is read once per committed root
-  *    ([[FrozenMeta]]: keyed on the root's marker, so a rebuild is
+  *    ([[GenerationStore.FrozenMeta]]: keyed on the root's marker, so a rebuild is
   *    re-read; one entry per index family), not once per probe and per
   *    micro-batch;
   *  - declared schemas: every sub-table is read under the schema
@@ -1899,7 +1899,7 @@ object AdmissionIndex {
 
   /** Ensure the front door's three persisted indexes, building any
     * missing ones CONCURRENTLY (guide §2.6): the families are
-    * independent (different corpora/parameter keys, per-dir build
+    * independent (different corpora/parameter keys, per-family build
     * locks, atomic publish), so on a cold store the emb and fp builds
     * overlap the dominant text-index build instead of queueing behind
     * it — the one-time bring-up cost drops toward max(build) from

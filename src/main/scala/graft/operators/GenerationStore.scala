@@ -65,9 +65,12 @@ import org.apache.spark.sql.functions.col
   * Locks. Threads ensuring one index family serialize on its build lock
   * ([[lockFor]], keyed by the `{path}-{family}` prefix, so a long-lived
   * process holds one lock per family, not one per corpus generation);
-  * different families build concurrently. Sweeps, folds and compactions
-  * also hold this object's monitor. The order is always family lock,
-  * then monitor. */
+  * different families build concurrently (the front door's three
+  * families build side by side on a cold store). Sweeps, folds and
+  * compactions also hold this object's monitor, so a sweep never
+  * interleaves with a fold. The order is always family lock, then
+  * monitor, never the reverse, so no cycle exists. Across processes the
+  * scratch-and-rename publish is the only exclusion needed. */
 object GenerationStore {
 
   /** Bumping this invalidates every persisted index (layout change).
@@ -278,6 +281,10 @@ object GenerationStore {
   private[operators] def publish(tmp: String, dest: String): Unit = {
     val t = Paths.get(tmp)
     val d = Paths.get(dest)
+    // only a MARKERLESS dest is removed, checked right before the
+    // delete: a dest another writer committed meanwhile is never
+    // deleted (that would blind readers to a published dir); the
+    // rename below then loses the race
     if (Files.exists(d) && !Files.exists(d.resolve(Marker))) {
       Seq("delta", "staged").foreach { sub =>
         val src = d.resolve(sub)
