@@ -60,7 +60,7 @@ object RefCompare {
           .csv(s"$dir/graft_out")
         println(f"""{"metric":"graft_accident","unit":"sec","cpus":$cpus,"n_rows":$nRows,"danger_scores_sec":$t%.3f,"dir":"$dir"}""")
       case _ =>
-        def docs = spark.read.parquet(s"$dir/documents.parquet")
+        def docs = Tables.documents(spark, dir)
         val declarative = timeBest(() =>
           operators.TextOps.wordcount(docs).queryExecution.toRdd.count(): Unit)
         val kernel = timeBest(() =>

@@ -1,17 +1,82 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixture tables (TESTDATA.md).
   *
   * All queries take an `sfDir` (e.g. `/root/testdata/sf0.01`) so the same
   * code runs at every scale factor. At cluster scale these paths would be
-  * object-store prefixes; the reader is identical (`spark.read.parquet`),
-  * and Catalyst pushes filters/projections into the scan either way.
-  */
+  * object-store prefixes; Catalyst pushes filters/projections into the
+  * scan either way.
+  *
+  * A table's parquet schema is inferred (one Spark job) on its first
+  * read only. The inferred schema is kept per table path, keyed on a
+  * stamp of the path's data files (path, length and modification time
+  * of every file a Hadoop recursive listing returns, so object-store
+  * prefixes work too) and on the session settings that change how
+  * parquet types convert to Spark types ([[SchemaConfs]]). A later read
+  * with the same key passes that schema to the reader, so no inference
+  * job runs; a changed file or setting misses and replaces the path's
+  * one entry, so a long-lived process holds one schema per table. The
+  * given schema is exactly what inference would return: inference is a
+  * function of those files and settings alone, and `HadoopFsRelation`
+  * makes a given schema nullable as it does an inferred one. Every call
+  * builds a fresh relation (a shared DataFrame would make self-joins
+  * ambiguous). */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The session settings parquet schema inference reads: the type
+    * converter's switches and what picks the files it reads. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class SchemaKey(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** One (key, schema) entry per table path. Read and replaced without
+    * a lock held across the inference job: two racing first reads both
+    * infer, and either result is right. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** Every file under `path` with its length and modification time,
+    * sorted; `None` when the path cannot be listed, so the plain read
+    * reports the error itself. */
+  private def filesStamp(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.IOException => None }
+  }
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    filesStamp(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = SchemaKey(files, SchemaConfs.map(k => spark.conf.getOption(k)))
+        val hit = schemas.get(path)
+        if (hit != null && hit._1 == key) spark.read.schema(hit._2).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemas.put(path, (key, df.schema))
+          df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1003,13 +1003,12 @@ object AdmissionIndex {
     val dir = ensureIndex(spark, sfDir, threshold, maxDfFrac)
     val out = s"$dir/sunk148"
     GenerationStore.deleteRec(java.nio.file.Paths.get(out))
-    // one read of the documents (one schema resolution), filtered per
-    // residue
-    val docs = graft.Tables.documents(spark, sfDir)
+    // one collect of the odd half, split per residue on the driver in
+    // scan order
+    val odd = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
-    val batches = Seq(1L, 3L).map { res =>
-      docs.filter(col("doc_id") % 4 === res).collect().toSeq
-    }
+      .filter(col("doc_id") % 2 === 1).collect().toSeq
+    val batches = Seq(1L, 3L).map(res => odd.filter(_._1 % 4 == res))
     def drive(bs: Seq[Seq[(Long, String)]]): Unit = {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]

@@ -18,7 +18,8 @@ import graft.operators.StageMemo
   *
   * Nor does it re-read what cannot change: a warm front-door call reads
   * no frozen index metadata (hot set, IVF centroids) and infers no index
-  * schema, so q139 + q148 stay inside a job budget. */
+  * schema, neither q139 nor q148 infers an input table's schema, so
+  * q139 + q148 stay inside a job budget. */
 class CodegenReuseSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -81,9 +82,10 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   /** Jobs one warm q139 call plus one q148 run may start at sf0.001,
-    * local[4]: they run 62 (q139 35, q148 27). Before the frozen-metadata
+    * local[4]: they run 58 (q139 33, q148 25). Before the frozen-metadata
     * cache, the declared index schemas and the one-job bucket manifests
-    * the same calls ran 92 (50 + 42). */
+    * the same calls ran 92 (50 + 42); before the input-table schema cache
+    * and q148's one micro-batch collect, 62 (35 + 27). */
   private val AdmissionJobBudget = 70
 
   test("admission probe: a warm q139 call and a q148 run stay inside the job " +
@@ -100,6 +102,9 @@ class CodegenReuseSpec extends SparkSpec {
     val inferred = q139Jobs.flatMap(_._1)
       .filter(_.startsWith("parquet at AdmissionIndex"))
     assert(inferred.isEmpty, s"warm q139 inferred index schemas: $inferred")
+    val tableInferred = (q139Jobs ++ q148Jobs).flatMap(_._1)
+      .filter(_.startsWith("parquet at Tables"))
+    assert(tableInferred.isEmpty, s"q139/q148 inferred input-table schemas: $tableInferred")
     // a read of a frozen table is a SQL execution scanning its directory
     val frozen = "/(hot|centroids)[\\],]".r
     val frozenReads = q139Jobs.flatMap(_._2).distinct
