@@ -16,7 +16,8 @@ class TablesSpec extends SparkSpec {
   private val fixtures = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private def jobsDuring(body: => Unit): Int = {
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
@@ -25,10 +26,10 @@ class TablesSpec extends SparkSpec {
     org.apache.spark.graft.ListenerDrain.drain(sc)
     sc.addSparkListener(l)
     try {
-      body
+      val a = body
       org.apache.spark.graft.ListenerDrain.drain(sc)
+      (a, n.get)
     } finally sc.removeSparkListener(l)
-    n.get
   }
 
   private def withTempDir(f: Path => Unit): Unit = {
@@ -39,8 +40,7 @@ class TablesSpec extends SparkSpec {
   test("a repeat load of an unchanged table starts no Spark job") {
     assume(new java.io.File(sfDir).isDirectory, s"fixture dir $sfDir missing")
     val first = Tables.lineitem(spark, sfDir)
-    var again: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring { again = Tables.lineitem(spark, sfDir) }
+    val (again, jobs) = jobsDuring(Tables.lineitem(spark, sfDir))
     assert(jobs == 0, s"a repeat load started $jobs jobs")
     assert(again.schema == first.schema)
     assert(again.count() == first.count())
