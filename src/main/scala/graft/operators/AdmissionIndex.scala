@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
-  LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType, StringType, StructField, StructType}
 
 /** Persisted near-dup admission index — the durable form of the
   * incremental admission gate (q130).
@@ -406,10 +406,48 @@ object AdmissionIndex {
     * execution) and the driver merges at most partitions × buckets ints.
     * `distinct().collect()` paid an AQE shuffle-stage job plus a result
     * job for the same few ints. */
-  private def bucketManifest(df: DataFrame, c: Column): Array[Int] = {
+  private def bucketManifest(df: DataFrame, c: Column): Array[Int] =
+    countedManifest(df, c)._1
+
+  /** [[bucketManifest]] plus the number of rows it read, from the same
+    * one job: each partition returns its distinct ids and its row
+    * count. A caller that needs the row count only to size work (the
+    * chunk decision) gets it without a `count()` job of its own. */
+  private def countedManifest(df: DataFrame, c: Column): (Array[Int], Long) = {
     import df.sparkSession.implicits._
-    df.select(c).as[Int].mapPartitions(_.toSet.iterator)
-      .collect().distinct.sorted
+    val parts = df.select(c).as[Int].mapPartitions { it =>
+      val ids = scala.collection.mutable.HashSet.empty[Int]
+      var n = 0L
+      it.foreach { v => ids += v; n += 1 }
+      Iterator((ids.toArray, n))
+    }.collect()
+    (parts.flatMap(_._1).distinct.sorted, parts.map(_._2).sum)
+  }
+
+  /** Each batch doc's best match from (doc, match, score) rows: the
+    * highest score, ties to the lowest match id — the `score DESC,
+    * match ASC` rank the oracles state, with Spark's double ordering.
+    * ONE job and no shuffle: each partition keeps its own best per doc
+    * (`mapPartitions` inside the Dataset's SQL execution), so the
+    * driver merges at most one row per doc and partition. */
+  private def bestPerDoc(pairs: DataFrame): Map[Long, Long] = {
+    import pairs.sparkSession.implicits._
+    val local = pairs.as[(Long, Long, Double)]
+      .mapPartitions(it => bestOf(it).iterator.map { case (d, (m, s)) => (d, m, s) })
+      .collect()
+    bestOf(local.iterator).map { case (d, (m, _)) => d -> m }
+  }
+
+  private def bestOf(rows: Iterator[(Long, Long, Double)]): Map[Long, (Long, Double)] = {
+    val best = scala.collection.mutable.HashMap.empty[Long, (Long, Double)]
+    rows.foreach { case (d, m, s) =>
+      val keep = best.get(d).exists { case (m0, s0) =>
+        val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s0, s)
+        c > 0 || (c == 0 && m0 <= m)
+      }
+      if (!keep) best(d) = (m, s)
+    }
+    best.toMap
   }
 
   def probePairs(batch: DataFrame, dir: String,
@@ -580,21 +618,55 @@ object AdmissionIndex {
   private[operators] def pairsVsIndexPrunedPlan(
       batchDocs: DataFrame, dir: String,
       threshold: Double): (DataFrame, () => Unit) = {
-    val spark = batchDocs.sparkSession
+    val sigA = probeSigned(batchDocs, dir, threshold)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (touched, _) = bandManifest(sigA, dir, threshold)
+    val (plan, release) = signedPairsPlan(sigA, dir, threshold, touched)
+    (plan.select(col("batch_doc"), col("base_doc"),
+        round(col("jac"), 4).as("jaccard")),
+      () => { release(); sigA.unpersist(false); () })
+  }
+
+  /** A batch's probe-side signatures, (a, ha, siga): [[signedBatch]]
+    * under the probe's column names. */
+  private def probeSigned(batch: DataFrame, dir: String,
+                          threshold: Double): DataFrame =
+    signedBatch(batch, dir, threshold)
+      .select(col("doc_id").as("a"), col("hset").as("ha"), col("sig").as("siga"))
+
+  /** The touched band-bucket manifest of a signed frame (cols a, siga)
+    * and the number of signed docs in it, from ONE job: the manifest
+    * job reads every band row, and each signed doc yields exactly `b`
+    * of them, so the doc count the chunk decision needs comes with the
+    * buckets instead of from a `count()` of its own. */
+  private def bandManifest(sigA: DataFrame, dir: String,
+                           threshold: Double): (Array[Int], Long) = {
+    val (b, r) = Dedup.lshBanding(threshold)
+    val (bandBuckets, _) = readBucketCounts(dir)
+    val (touched, rows) = countedManifest(
+      sigA.select(col("siga"), explode(expr(s"sequence(0, ${b - 1})")).as("band")),
+      pmod(hash(expr(bandKeyExpr("siga", r))), lit(bandBuckets)))
+    (touched, rows / b)
+  }
+
+  /** The pruned pair probe from a PERSISTED signed frame (cols a, ha,
+    * siga) whose band manifest is `touched`: verified (batch_doc,
+    * base_doc, jac) with jac at full precision, un-materialized, plus
+    * the release hook of its one cache (the band-matched rows, read by
+    * the candidate manifest and the verify join). The band rows are
+    * re-derived from the signed frame's cache rather than persisted:
+    * since the manifest came with the doc count, the join is their one
+    * reader. */
+  private def signedPairsPlan(sigA: DataFrame, dir: String,
+      threshold: Double, touched: Array[Int]): (DataFrame, () => Unit) = {
+    val spark = sigA.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val (b, r) = Dedup.lshBanding(threshold)
-    val (bandBuckets, docBuckets) = readBucketCounts(dir)
-    val hot = hotSets(spark, dir)
-    val shB = Dedup.applyHotFilter(Dedup.hashShingled(batchDocs), hot)
-    val sigB = shB.select(col("doc_id").as("a"), col("hset").as("ha"),
-      Dedup.permMinsUdf(b * r)(col("hset")).as("siga"))
-    val bandsB = sigB
+    val (_, docBuckets) = readBucketCounts(dir)
+    val bandsB = sigA
       .select(col("a"), col("ha"), col("siga"),
         explode(expr(s"sequence(0, ${b - 1})")).as("band"))
       .withColumn("band_key", expr(bandKeyExpr("siga", r)))
-      .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched = bucketManifest(bandsB, col("band_bucket"))
     val roots = GenerationStore.indexRoots(dir)
     val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
       .select(col("doc_id").as("bb"), col("band_key"))
@@ -618,9 +690,8 @@ object AdmissionIndex {
       .withColumn("jac",
         col("inter") / (col("stot") - col("inter")).cast("double"))
       .filter(col("jac") >= threshold)
-      .select(col("a").as("batch_doc"), col("bb").as("base_doc"),
-        round(col("jac"), 4).as("jaccard"))
-    (plan, () => { matched.unpersist(false); bandsB.unpersist(false); () })
+      .select(col("a").as("batch_doc"), col("bb").as("base_doc"), col("jac"))
+    (plan, () => { matched.unpersist(false); () })
   }
 
   /** The measured micro-batch operating point: ~15k docs per probe
@@ -643,8 +714,9 @@ object AdmissionIndex {
     * levels per-chunk latency at the same total. xxhash64 is
     * codegen'd and deterministic, so a foreachBatch replay reproduces
     * the same chunks. Callers persist `batch` first — this counts it
-    * and each chunk re-filters it. Returns the batch unsplit when it
-    * is already within the operating point. */
+    * (n = batch rows; the sweep harness's serial form) and each chunk
+    * re-filters it. Returns the batch unsplit when it is already within
+    * the operating point. */
   private[graft] def hashChunks(batch: DataFrame,
                                 maxDocs: Long): Seq[DataFrame] = {
     require(maxDocs > 0, s"maxDocsPerBatch must be positive, got $maxDocs")
@@ -652,7 +724,7 @@ object AdmissionIndex {
     if (n <= maxDocs) Seq(batch)
     else {
       val k = chunkCount(n, maxDocs)
-      (0 until k).map(i => batch.filter(chunkExpr(k) === i))
+      (0 until k).map(i => batch.filter(chunkExpr(col("doc_id"), k) === i))
     }
   }
 
@@ -661,15 +733,19 @@ object AdmissionIndex {
     * the front door's chunked tier-2 probe (r15 ADVICE: two drifting
     * copies would silently break the foreachBatch-replay
     * chunk-determinism claim and the sweep's serial-vs-deployed
-    * comparison). */
+    * comparison). `n` is the batch's SIGNED doc count on the two probe
+    * paths, read off their band manifest ([[bandManifest]]: b band rows
+    * per signed doc), so sizing costs no job; docs too short to sign
+    * never reach the verify the chunks bound. The count is a function
+    * of the batch alone, so a replayed micro-batch chunks the same. */
   private[operators] def chunkCount(n: Long, maxDocs: Long): Int =
     math.min(((n + maxDocs - 1) / maxDocs).toInt, 4096)
 
   /** The deterministic chunk assignment every chunked path shares:
-    * pmod(xxhash64(doc_id), k) — codegen'd, replay-stable under
+    * pmod(xxhash64(doc id), k) — codegen'd, replay-stable under
     * foreachBatch, skew-leveling on id-clustered corpora. */
-  private def chunkExpr(k: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("doc_id")), lit(k.toLong)).cast("int")
+  private def chunkExpr(id: Column, k: Int): Column =
+    pmod(xxhash64(id), lit(k.toLong)).cast("int")
 
   /** Per-chunk verify-round await bound — the A12 fail-loud contract
     * applied to the chunked probe's own driver pool (r15 verdict item
@@ -720,62 +796,60 @@ object AdmissionIndex {
         DefaultChunkVerifyTimeout): DataFrame = {
     require(maxDocsPerBatch > 0,
       s"maxDocsPerBatch must be positive, got $maxDocsPerBatch")
-    val cached = batchDocs.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = cached.count()
-      if (n <= maxDocsPerBatch) pairsVsIndexPruned(cached, dir, threshold)
-      else chunkedProbeShared(cached, dir, threshold,
-        chunkCount(n, maxDocsPerBatch), probeParallelism, chunkVerifyTimeout)
-    } finally { cached.unpersist(false); () }
-  }
-
-  /** The oversized-batch body of [[pairsVsIndexChunked]]: sign the
-    * whole batch ONCE, then the shared-manifest chunked verify
-    * ([[chunkedPairsCore]]). Chunk assignment is [[hashChunks]]'
-    * exactly ([[chunkExpr]]) — deterministic under foreachBatch
-    * replay, skew-leveling on id-clustered corpora. */
-  private[operators] def chunkedProbeShared(batch: DataFrame, dir: String,
-      threshold: Double, k: Int, parallelism: Int,
-      verifyTimeout: scala.concurrent.duration.FiniteDuration =
-        DefaultChunkVerifyTimeout): DataFrame = {
-    val spark = batch.sparkSession
-    val (b, r) = Dedup.lshBanding(threshold)
-    val hot = hotSets(spark, dir)
     // sign the whole batch ONCE (shingle + permMins is the dominant
-    // batch-side term); chunk ids ride along so every later stage
-    // derives its chunk slice by a cached-column filter
-    val sigB = Dedup.applyHotFilter(Dedup.hashShingled(batch), hot)
-      .select(col("doc_id").as("a"), col("hset").as("ha"),
-        Dedup.permMinsUdf(b * r)(col("hset")).as("siga"),
-        chunkExpr(k).as("chunk"))
+    // batch-side term); both paths read the signed cache
+    val sigA = probeSigned(batchDocs, dir, threshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // rounding outside the per-chunk checkpoints is row-local — same
-    // q134 output, and the core's full-precision jac stays available
-    // to the front door's best-match rank
-    try chunkedPairsCore(sigB, dir, threshold, k, parallelism, verifyTimeout)
+    // rounding after the materialization is row-local — same q134
+    // output, and the probe's full-precision jac stays available to the
+    // front door's best-match rank
+    try probeSignedPairs(sigA, dir, threshold, maxDocsPerBatch,
+        probeParallelism, chunkVerifyTimeout)(_.localCheckpoint(true))
       .select(col("batch_doc"), col("base_doc"),
         round(col("jac"), 4).as("jaccard"))
-    finally { sigB.unpersist(false); () }
+    finally { sigA.unpersist(false); () }
+  }
+
+  /** The pair probe of a PERSISTED signed frame (cols a, ha, siga) at
+    * the operating point — the shared tier-2 body of
+    * [[pairsVsIndexChunked]] (q134/q148) and the front door: ONE band
+    * manifest job yields the touched buckets and the signed-doc count
+    * ([[bandManifest]]); a batch within `maxDocsPerBatch` signed docs
+    * runs the single pruned probe ([[signedPairsPlan]]), a larger one
+    * the shared-manifest chunked verify ([[chunkedPairsCore]]) with
+    * chunks assigned as [[hashChunks]] assigns them ([[chunkExpr]]).
+    * `use` consumes the pairs (batch_doc, base_doc, jac at full
+    * precision) before the probe's caches are released: the single path
+    * hands it the un-materialized plan, the chunked path the union of
+    * its materialized rounds (which q134/q148's checkpoint then copies
+    * once more: one job per oversized batch). */
+  private def probeSignedPairs[T](sigA: DataFrame, dir: String,
+      threshold: Double, maxDocsPerBatch: Long, parallelism: Int,
+      verifyTimeout: scala.concurrent.duration.FiniteDuration)
+      (use: DataFrame => T): T = {
+    val (touched, signedDocs) = bandManifest(sigA, dir, threshold)
+    val k = chunkCount(signedDocs, maxDocsPerBatch)
+    if (k <= 1) {
+      val (plan, release) = signedPairsPlan(sigA, dir, threshold, touched)
+      try use(plan) finally release()
+    } else use(chunkedPairsCore(sigA.withColumn("chunk", chunkExpr(col("a"), k)),
+      dir, threshold, k, parallelism, verifyTimeout, touched))
   }
 
   /** The shared-manifest chunked pair probe from an already-signed,
-    * already-chunk-tagged frame `sigB` (cols a, ha, siga, chunk;
-    * PERSISTED by the caller) — the shared core of
-    * [[pairsVsIndexChunked]] (q134, which signs inline) and the
-    * composed front door's tier-2 probe (r15 verdict item 1, which
-    * reuses the lifecycle's [[signedBatch]] frame). The batch's band
-    * keys ride as NARROW rows (three scalar columns, no signature
-    * arrays) into ONE partition-pruned scan of the union of every
-    * chunk's touched band buckets (the touched-bucket manifest); only
-    * the verify stage — re-attaching both signature arrays and walking
-    * the sorted intersect — runs per chunk, `parallelism`-wide from a
-    * bounded driver pool (the MLOps.fitPairModels idiom). Returns
-    * (batch_doc, base_doc, jac) with jac at FULL precision: q134
-    * rounds it for its contract; the front door ranks best-match on
-    * the unrounded value, exactly what [[probePairsSigned]] feeds the
-    * rank in the unchunked path (rounding before ranking could flip a
-    * rank-1 tie).
+    * already-chunk-tagged frame `sigB` (cols a, ha, siga, chunk; read
+    * from a signed frame the caller PERSISTED) whose band manifest is
+    * `touched` — the oversized-batch path of [[probeSignedPairs]], for
+    * q134/q148 and the composed front door's tier 2 alike. The batch's
+    * band keys ride as NARROW rows (scalar columns, no signature arrays)
+    * into ONE partition-pruned scan of the union of every chunk's
+    * touched band buckets; only the verify stage — re-attaching both
+    * signature arrays and walking the sorted intersect — runs per
+    * chunk, `parallelism`-wide from a bounded driver pool (the
+    * MLOps.fitPairModels idiom). Returns (batch_doc, base_doc, jac)
+    * with jac at FULL precision: q134 rounds it for its contract; the
+    * front door ranks best-match on the unrounded value, as on the
+    * single path (rounding before ranking could flip a rank-1 tie).
     *
     * Memory shape (r15 ADVICE wording): the verify-JOIN width is
     * per-chunk × parallelism (each round materializes via
@@ -787,42 +861,31 @@ object AdmissionIndex {
     * — the A12 contract applied to the probe's own pool. */
   private def chunkedPairsCore(sigB: DataFrame, dir: String,
       threshold: Double, k: Int, parallelism: Int,
-      verifyTimeout: scala.concurrent.duration.FiniteDuration): DataFrame = {
+      verifyTimeout: scala.concurrent.duration.FiniteDuration,
+      touched: Array[Int]): DataFrame = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     val spark = sigB.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val (b, r) = Dedup.lshBanding(threshold)
-    val (bandBuckets, docBuckets) = readBucketCounts(dir)
+    val (_, docBuckets) = readBucketCounts(dir)
     // NARROW band rows — no signature arrays; the arrays re-attach
-    // per chunk from sigB, so this one shared join shuffles three
-    // scalar columns instead of b copies of each array per doc
+    // per chunk from sigB, so this one shared join shuffles scalar
+    // columns instead of b copies of each array per doc
     val bandsB = sigB
       .select(col("a"), col("chunk"), col("siga"),
         explode(expr(s"sequence(0, ${b - 1})")).as("band"))
       .select(col("a"), col("chunk"), col("band"),
         expr(bandKeyExpr("siga", r)).as("band_key"))
-      .withColumn("band_bucket", pmod(hash(col("band_key")), lit(bandBuckets)))
+    val roots = GenerationStore.indexRoots(dir)
+    val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
+      .select(col("doc_id").as("bb"), col("band_key"))
+    // ONE shared band join: every touched bucket file is scanned once
+    // for the whole batch (the r14 per-chunk form re-read every bucket
+    // two chunks touched); the first round's manifest materializes it
+    val matched = bandsB.join(baseBands, Seq("band_key"))
+      .select(col("a"), col("chunk"), col("band"), col("bb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val matched =
-      try {
-        // the touched-bucket manifest: union of every chunk's band
-        // buckets, collected once (bounded by the bucket constant)
-        val touched = bucketManifest(bandsB, col("band_bucket"))
-        val roots = GenerationStore.indexRoots(dir)
-        val baseBands = prunedUnion(spark, roots, "bands", "band_bucket",
-            touched)
-          .select(col("doc_id").as("bb"), col("band_key"))
-        // ONE shared band join: every touched bucket file is scanned
-        // once for the whole batch (the r14 per-chunk form re-read
-        // every bucket two chunks touched)
-        val m = bandsB.join(baseBands, Seq("band_key"))
-          .select(col("a"), col("chunk"), col("band"), col("bb"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        m.count() // materialize before releasing the band rows
-        m
-      } finally { bandsB.unpersist(false); () }
     try {
-      val roots = GenerationStore.indexRoots(dir)
       val rMatch = (0 until r)
         .map(o => s"siga[j*$r+$o] = sigb[j*$r+$o]").mkString(" AND ")
       val d = threshold / (1.0 + threshold)
@@ -946,17 +1009,26 @@ object AdmissionIndex {
         Seq("batchId" -> id, "sink" -> true)
       }
 
+  /** The rows [[exactlyOnceParquetSink]] commits for the near-dup
+    * stream: [[startNearDupStream]]'s pairs plus the sink's `batch_id`.
+    * The sink's own writes fix this schema, as the index writers fix
+    * [[SubTableSchemas]], so [[readSunk]] hands it to the reader and
+    * runs no parquet schema-inference job. */
+  private[operators] val SunkSchema: StructType = StructType(Seq(
+    StructField("batch_doc", LongType), StructField("base_doc", LongType),
+    StructField("jaccard", DoubleType), StructField("batch_id", LongType)))
+
   /** Every batch [[exactlyOnceParquetSink]] has COMMITTED under
-    * `outDir` — markerless (crashed) dirs are invisible. Empty frame
-    * with no schema is impossible to synthesize here, so at least one
-    * committed batch is required. */
+    * `outDir`, read as near-dup pair rows under [[SunkSchema]] —
+    * markerless (crashed) dirs are invisible. At least one committed
+    * batch is required. */
   def readSunk(spark: SparkSession, outDir: String): DataFrame = {
     val committed = Option(new java.io.File(outDir).list()).toSeq.flatten
       .filter(n => n.startsWith("batch=") &&
         GenerationStore.committed(s"$outDir/$n"))
       .map(n => s"$outDir/$n/rows").sorted
     require(committed.nonEmpty, s"no committed batches under $outDir")
-    spark.read.parquet(committed: _*)
+    spark.read.schema(SunkSchema).parquet(committed: _*)
   }
 
   /** q134 driver form: the stateless probe's BATCH twin over the
@@ -1351,6 +1423,15 @@ object AdmissionIndex {
     * (the r10 persist leaked per ingest, ADVICE). */
   private def embScored(batch: DataFrame, dir: String,
                         threshold: Double, nProbe: Int): DataFrame = {
+    val (plan, release) = embScoredPlan(batch, dir, threshold, nProbe)
+    try plan.localCheckpoint(true) finally release()
+  }
+
+  /** [[embScored]] before its checkpoint, plus the release hook of its
+    * probe-cell cache — the front door consumes the plan directly
+    * (one collect) instead of checkpointing and reading it again. */
+  private def embScoredPlan(batch: DataFrame, dir: String,
+      threshold: Double, nProbe: Int): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val cents = centroidSets(spark, dir)
@@ -1359,18 +1440,18 @@ object AdmissionIndex {
       .select(col("vec_id"), col("qv"), col("n2"),
         explode(Similarity.ivfProbeUdf(bc, nProbe)(col("qv"))).as("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val release = () => { probes.unpersist(false); () }
     try {
       val touched = bucketManifest(probes, col("cell"))
       // union of base + committed delta generations, partition-pruned
       // to the probed cells — same multi-root shape as the text probe
       val baseCells =
         prunedUnion(spark, GenerationStore.indexRoots(dir), "cells", "cell", touched)
-      probes.as("x").join(baseCells.as("y"), Seq("cell"))
+      (probes.as("x").join(baseCells.as("y"), Seq("cell"))
         .select(col("x.vec_id").as("batch_vec"), col("y.vec_id").as("base_vec"),
           expr(Similarity.cosExpr).as("cos"))
-        .filter(col("cos") >= threshold)
-        .localCheckpoint(true)
-    } finally probes.unpersist(false)
+        .filter(col("cos") >= threshold), release)
+    } catch { case scala.util.control.NonFatal(e) => release(); throw e }
   }
 
   /** Fully STATELESS embedding probe — the IVF twin of [[pairsVsIndex]]
@@ -1803,17 +1884,44 @@ object AdmissionIndex {
     * callers run `release()` after materializing. */
   private[graft] def fpProbePlan(batch: DataFrame,
                                  dir: String): (DataFrame, () => Unit) = {
-    val spark = batch.sparkSession
-    val buckets = readFpBuckets(dir)
-    val bf = batch
-      .select(col("doc_id"), fpCol(col("text")).as("fp"))
-      .withColumn("fp_bucket", pmod(hash(col("fp")), lit(buckets)))
+    val bf = fingerprinted(batch, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val touched = bucketManifest(bf, col("fp_bucket"))
-    val idx = prunedUnion(spark, GenerationStore.indexRoots(dir), "fps", "fp_bucket", touched)
-    val out = bf.join(idx.select(col("fp"), col("bid")), Seq("fp"))
+    val out = fpMatches(bf, dir, bucketManifest(bf, col("fp_bucket")))
       .groupBy(col("doc_id")).agg(min(col("bid")).as("exact_id"))
     (out, () => { bf.unpersist(false); () })
+  }
+
+  /** A batch's (doc_id, fp, fp_bucket) under `dir`'s fp layout. */
+  private def fingerprinted(batch: DataFrame, dir: String): DataFrame =
+    batch.select(col("doc_id"), fpCol(col("text")).as("fp"))
+      .withColumn("fp_bucket", pmod(hash(col("fp")), lit(readFpBuckets(dir))))
+
+  /** Every (doc_id, bid) match of a [[fingerprinted]] batch against the
+    * fp rows of every live root, partition-pruned to `touched`. */
+  private def fpMatches(bf: DataFrame, dir: String,
+                        touched: Array[Int]): DataFrame =
+    bf.join(prunedUnion(bf.sparkSession, GenerationStore.indexRoots(dir),
+        "fps", "fp_bucket", touched).select(col("fp"), col("bid")), Seq("fp"))
+      .select(col("doc_id"), col("bid"))
+
+  /** The exact tier on the driver, for the front door: every batch doc
+    * id (one per batch row, in scan order) and each exact-matched doc's
+    * lowest base id — [[fpProbe]]'s answer. Two jobs and no shuffle: one
+    * collect of the batch's (doc_id, fp_bucket) rows, which is the ids
+    * and the fp-bucket manifest at once, and one collect of the pruned
+    * fp join's matches, reduced to min(bid) per doc on the driver
+    * ([[bestPerDoc]] with one score for all: ties go to the lowest id).
+    * Both collects hold a few longs per batch row. */
+  private def fpProbeOnDriver(batch: DataFrame,
+                              dir: String): (Array[Long], Map[Long, Long]) = {
+    import batch.sparkSession.implicits._
+    val bf = fingerprinted(batch, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = bf.select(col("doc_id"), col("fp_bucket")).as[(Long, Int)].collect()
+      val matches = fpMatches(bf, dir, rows.map(_._2).distinct.sorted)
+      (rows.map(_._1), bestPerDoc(matches.select(col("doc_id"), col("bid"), lit(0.0))))
+    } finally { bf.unpersist(false); () }
   }
 
   private def readFpBuckets(dir: String): Int =
@@ -1853,12 +1961,12 @@ object AdmissionIndex {
 
   /** One incoming batch (odd doc_ids) → per-doc, per-tier reject
     * attribution: `(doc_id, tier ∈ exact|near_dup|semantic|admitted,
-    * match_id)` where match_id is the rejecting base doc/vector (NULL
-    * when admitted). Tier order is precedence order AND cost order —
-    * the fingerprint anti-join is the cheapest test and runs first;
-    * the minhash index probe only shingles what it passed; the IVF
-    * embedding probe (vectors keyed vec_id = doc_id) only scores what
-    * both passed. All three tiers read PERSISTED indexes (the mod-2
+    * match_id)` where match_id is the rejecting base doc/vector (-1
+    * when admitted), sorted by doc_id. Precedence: exact, then
+    * near_dup, then semantic (vectors keyed vec_id = doc_id); the three
+    * tiers probe the batch concurrently and the precedence is applied
+    * when the attribution is assembled ([[frontDoorProbe]]). All three
+    * tiers read PERSISTED indexes (the mod-2
     * text index shared with q133/q134, the IVF index shared with
     * q135/q136), so per-ingest cost is O(batch + touched buckets/
     * cells) on every tier — nothing base-sized is recomputed.
@@ -1935,9 +2043,11 @@ object AdmissionIndex {
     * probes (mod-3/mod-4 indexes whose delta generations carry what
     * earlier batches admitted), and the fdlife sweep harness. Vectors
     * are looked up by vec_id = doc_id from `sfDir`'s embeddings table.
-    * An incoming frame past `maxDocsPerBatch` re-chunks its tier-2
-    * verify to the measured operating point (see [[frontDoorProbe]]) —
-    * output identical by per-doc independence. */
+    * An incoming frame past `maxDocsPerBatch` signed docs re-chunks
+    * its tier-2 verify to the measured operating point (see
+    * [[frontDoorProbe]]) — output identical by per-doc independence.
+    * Every index-reading leg has run when this returns: the
+    * attribution is a driver-built frame, already sorted by doc_id. */
   private[graft] def frontDoorOn(incoming: DataFrame, spark: SparkSession,
                                  sfDir: String, dir: String, edir: String,
                                  fdir: String, threshold: Double,
@@ -1947,28 +2057,54 @@ object AdmissionIndex {
     val (att, _, release) = frontDoorProbe(incoming, spark, sfDir,
       dir, edir, fdir, threshold, embThreshold, nProbe,
       maxDocsPerBatch, probeParallelism)
-    try att.orderBy(col("doc_id")) finally release()
+    release()
+    att
   }
 
-  /** [[frontDoorOn]] exposing the tier-2 SIGNED survivor frame (persisted;
+  /** [[frontDoorOn]] exposing the tier-2 SIGNED frame (persisted;
     * caller runs `release()` when done) — the lifecycle's fold reuses it
-    * so the admitted docs are never re-shingled/re-signed. The returned
-    * attribution's index-reading legs are all eager (fpProbe /
-    * localCheckpoint / embScored checkpoint), so it stays correct if the
-    * caller folds into the indexes before collecting it.
+    * so the admitted docs are never re-shingled/re-signed.
+    *
+    * Driver-held tier results. Each tier ends in one collect of a
+    * batch-bounded answer: tier 1 brings back every batch doc id and
+    * each exact match ([[fpProbeOnDriver]]), tiers 2 and 3 each doc's
+    * best match, chosen on the driver with the oracles' tie-breaks
+    * ([[bestPerDoc]]: near_dup `jac DESC, b ASC`, semantic `cos DESC,
+    * base_vec ASC`, both on the unrounded score). The attribution is
+    * then built on the driver as one local frame (LocalRelation) of
+    * (doc_id, tier, match_id), one row per batch row, sorted by doc_id.
+    * Size bound: three longs' worth per batch row, plus at most one
+    * (doc, match, score) row per doc and verify partition while a
+    * ranked tier is reduced. The frame reads no index and no batch, so
+    * every index-reading leg has run when this returns and the
+    * attribution stays correct if the caller folds into the indexes
+    * before reading it. (A checkpointed frame would carry its source
+    * plan's size estimate, a join's being the product of its inputs',
+    * and be delivered through sort-merge joins and bloom filters.)
+    *
+    * The three tiers probe the WHOLE batch concurrently: tiers 1 and 3
+    * from a two-thread pool, tier 2 in the calling thread. Precedence —
+    * exact, then near_dup, then semantic — is applied when the
+    * attribution is assembled. That is the oracle's own model (its
+    * per-tier CTEs rank over all docs and a CASE masks the lower
+    * tiers, [[frontDoorOracleAt]]) and changes no row, since each
+    * doc's probe result does not depend on which other docs are
+    * probed. Tiers 2 and 3 pay for the exact-matched docs too (bounded
+    * by the tier-1 match rate); in exchange neither waits for tier 1,
+    * whose manifest and probe used to head the whole chain. Awaits are
+    * bounded — the A12 fail-loud contract, same envelope as the chunk
+    * pool.
     *
     * Oversized batches (r15 verdict item 1): only tier 2's candidate
     * verify join has super-linear width — tiers 1 and 3 are narrow
     * partition-pruned joins (fingerprints; IVF cells) that run
-    * whole-batch regardless. So the composed probe signs the tier-1
-    * survivors ONCE and re-chunks ONLY the minhash verify through
-    * [[chunkedPairsCore]]: one shared touched-bucket band manifest for
-    * the whole batch, verify rounds overlapped `probeParallelism`-wide
-    * — exactly the [[pairsVsIndexChunked]] restructure (the r14 form
-    * pushed every tier chunk-by-chunk through this method serially,
-    * re-reading every band bucket two chunks touched). Per-doc probe
-    * independence keeps the attribution single-batch-identical
-    * (AdmissionIndexSpec pins chunked ≡ single). */
+    * whole-batch regardless. So tier 2 signs the batch ONCE and, past
+    * `maxDocsPerBatch` signed docs (counted by its band manifest job),
+    * re-chunks ONLY the minhash verify through [[chunkedPairsCore]] —
+    * exactly the [[pairsVsIndexChunked]] path ([[probeSignedPairs]]).
+    * Per-doc probe independence keeps the attribution
+    * single-batch-identical (AdmissionIndexSpec pins chunked ≡
+    * single). */
   private def frontDoorProbe(incoming: DataFrame, spark: SparkSession,
                              sfDir: String, dir: String, edir: String,
                              fdir: String, threshold: Double,
@@ -1977,89 +2113,48 @@ object AdmissionIndex {
                              probeParallelism: Int = DefaultProbeParallelism)
       : (DataFrame, DataFrame, () => Unit) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    // tier 1 — exact: the persisted fingerprint index ([[fpProbe]] is
-    // already eager + tiny; read twice: attribution + tier-2 input)
-    val exactBest = fpProbe(incoming, fdir)
-    val survivors1 = incoming
-      .join(exactBest.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    // tier 3 — IVF embedding probe — runs CONCURRENTLY with tier 2 from
-    // a one-thread pool (guide §2.6: overlap independent jobs; the
-    // serial form left the cores idle through two back-to-back chains
-    // of small pruned-scan jobs). Both tiers depend only on tier 1's
-    // survivors: the probe is per-doc independent, and the attribution
-    // CASE masks tier 3 for every nd-matched doc exactly as the
-    // oracle's own CTEs do (they rank over ALL docs too — see
-    // [[frontDoorOracleAt]]). Scoring survivors1 instead of the old
-    // post-tier-2 survivors2 adds IVF work only for the nd-matched
-    // fraction of the batch (bounded by the tier-2 match rate, ~5–10%
-    // on the fixtures) and changes no output row (spec + oracle
-    // gated). Await is bounded — the A12 fail-loud contract, same
-    // envelope as the chunk pool.
-    val embPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val semBestF = Future {
-      val vecs = graft.Tables.embeddings(spark, sfDir)
-        .join(survivors1.select(col("doc_id")),
-          col("vec_id") === col("doc_id"), "left_semi")
-      embProbe(vecs, edir, embThreshold, nProbe)
-        .select(col("batch_vec").as("doc_id"), col("base_vec").as("sem_id"))
-    }(ExecutionContext.fromExecutor(embPool))
-    // tier 2 — minhash index probe over tier 1's survivors only,
-    // signed ONCE (probe here, fold later from the same frame)
-    val signed1 = signedBatch(survivors1, dir, threshold)
+    val signed1 = signedBatch(incoming, dir, threshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (pairs, semBest) =
-      try {
-        val k = chunkCount(signed1.count(), maxDocsPerBatch)
-        val p =
-          if (k <= 1) probePairsSigned(signed1, dir, threshold)
-          else {
-            // the chunk-tagged view re-reads signed1's cache per stage; its
-            // own persist holds the projected arrays for the verify rounds
-            // (batch-sized, disk-spillable — released with the rounds)
-            val sigB = signed1.select(col("doc_id").as("a"),
-                col("hset").as("ha"), col("sig").as("siga"),
-                chunkExpr(k).as("chunk"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try chunkedPairsCore(sigB, dir, threshold, k, probeParallelism,
-                DefaultChunkVerifyTimeout)
-              .select(col("batch_doc").as("a"), col("base_doc").as("b"),
-                col("jac"))
-            finally { sigB.unpersist(false); () }
-          }
-        (p, Await.result(semBestF, DefaultChunkVerifyTimeout))
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"front-door tier-3 probe exceeded $DefaultChunkVerifyTimeout " +
-              "— failing loud (A12) instead of hanging on a wedged job")
-      } finally { embPool.shutdownNow(); () }
-    val ndBest = pairs
-      .withColumn("rnk", expr(
-        "row_number() OVER (PARTITION BY a ORDER BY jac DESC, b ASC)"))
-      .filter(col("rnk") === 1)
-      .select(col("a").as("doc_id"), col("b").as("nd_id"))
-      .localCheckpoint(true) // tiny; read by the attribution below
-    val att = incoming.select(col("doc_id"))
-      .join(exactBest, Seq("doc_id"), "left")
-      .join(ndBest, Seq("doc_id"), "left")
-      .join(semBest, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, lit("exact"))
-          .when(col("nd_id").isNotNull, lit("near_dup"))
-          .when(col("sem_id").isNotNull, lit("semantic"))
-          .otherwise(lit("admitted")).as("tier"),
-        // -1 sentinel, not NULL: admitted docs have no match, and a
-        // NULL would make the whole column float-ish in downstream
-        // pandas/arrow consumers (and NaN ≠ NaN in naive compares)
-        coalesce(col("exact_id"), col("nd_id"), col("sem_id"), lit(-1L))
-          .as("match_id"))
-    // NOT sorted here (guide §2.4: an orderBy used only for output
-    // determinism is a range exchange + sampling job per call): the
-    // staged-attribution path consumes this frame as a SET (parquet
-    // stage → filter/join; replay delivery re-reads the one committed
-    // file, so byte-stability is unaffected), and the declared-output
-    // path adds its sort in [[frontDoorOn]].
-    (att, signed1, () => { signed1.unpersist(false); () })
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val exactF = Future(fpProbeOnDriver(incoming, fdir))
+      val semF = Future {
+        val vecs = graft.Tables.embeddings(spark, sfDir)
+          .join(incoming.select(col("doc_id")),
+            col("vec_id") === col("doc_id"), "left_semi")
+        val (scored, release) = embScoredPlan(vecs, edir, embThreshold, nProbe)
+        try bestPerDoc(scored) finally release()
+      }
+      val nd = probeSignedPairs(signed1.select(col("doc_id").as("a"),
+          col("hset").as("ha"), col("sig").as("siga")), dir, threshold,
+        maxDocsPerBatch, probeParallelism, DefaultChunkVerifyTimeout)(bestPerDoc)
+      def awaited[T](f: Future[T], tier: String): T =
+        try Await.result(f, DefaultChunkVerifyTimeout)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(
+              s"front-door $tier probe exceeded $DefaultChunkVerifyTimeout " +
+                "— failing loud (A12) instead of hanging on a wedged job")
+        }
+      val (ids, exact) = awaited(exactF, "exact")
+      val sem = awaited(semF, "semantic")
+      val rows = ids.sorted.toSeq.map { d =>
+        val (tier, m) = exact.get(d).map("exact" -> _)
+          .orElse(nd.get(d).map("near_dup" -> _))
+          .orElse(sem.get(d).map("semantic" -> _))
+          // -1 sentinel, not NULL: admitted docs have no match, and a
+          // NULL would make the whole column float-ish in downstream
+          // pandas/arrow consumers (and NaN ≠ NaN in naive compares)
+          .getOrElse("admitted" -> -1L)
+        org.apache.spark.sql.Row(d, tier, m)
+      }
+      import scala.jdk.CollectionConverters._
+      val att = spark.createDataFrame(rows.asJava, SubTableSchemas("att"))
+      (att, signed1, () => { signed1.unpersist(false); () })
+    } catch {
+      case scala.util.control.NonFatal(e) => signed1.unpersist(false); throw e
+    } finally { pool.shutdownNow(); () }
   }
 
   // ---- staged round attribution: the replay-safety anchor ----------
@@ -2281,10 +2376,9 @@ object AdmissionIndex {
   /** Composes the three tiers' CTE chains (exact fingerprint join,
     * the mod-2 minhash pair CTEs, the IVF cell-assignment CTEs) and
     * attributes each incoming doc to its first rejecting tier. The
-    * per-tier best-match CTEs rank over ALL docs (not survivors) —
-    * the CASE precedence masks lower tiers exactly as the engine's
-    * survivor filtering does, because per-doc probe results are
-    * independent of which other docs are probed. */
+    * per-tier best-match CTEs rank over ALL docs — as the engine's
+    * tiers probe the whole batch — and the CASE precedence masks the
+    * lower tiers exactly as the engine's driver-side assembly does. */
   def frontDoorOracleAt(threshold: Double, maxDfFrac: Double,
                         embThreshold: Double, centroids: Int,
                         nProbe: Int): String =

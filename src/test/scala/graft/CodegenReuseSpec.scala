@@ -18,8 +18,10 @@ import graft.operators.StageMemo
   *
   * Nor does it re-read what cannot change: a warm front-door call reads
   * no frozen index metadata (hot set, IVF centroids) and infers no index
-  * schema, neither q139 nor q148 infers an input table's schema, so
-  * q139 + q148 stay inside a job budget. */
+  * schema, neither q139 nor q148 infers an input table's schema, q148
+  * reads its sink back under a declared schema, and a warm q139 counts
+  * nothing only to size its work, so q139 + q148 stay inside a job
+  * budget. */
 class CodegenReuseSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -82,11 +84,13 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   /** Jobs one warm q139 call plus one q148 run may start at sf0.001,
-    * local[4]: they run 58 (q139 33, q148 25). Before the frozen-metadata
+    * local[4]: they run 34 (q139 16, q148 18). Before the frozen-metadata
     * cache, the declared index schemas and the one-job bucket manifests
-    * the same calls ran 92 (50 + 42); before the input-table schema cache
-    * and q148's one micro-batch collect, 62 (35 + 27). */
-  private val AdmissionJobBudget = 70
+    * the same calls ran 92 (50 + 42); before the input-table schema
+    * cache and q148's one micro-batch collect, 62 (35 + 27); before the
+    * driver-held front-door tier results, the counted band manifest and
+    * the declared sink schema, 58 (33 + 25). */
+  private val AdmissionJobBudget = 40
 
   test("admission probe: a warm q139 call and a q148 run stay inside the job " +
     "budget; a warm q139 call infers no index schema and reads no hot set " +
@@ -102,6 +106,11 @@ class CodegenReuseSpec extends SparkSpec {
     val inferred = q139Jobs.flatMap(_._1)
       .filter(_.startsWith("parquet at AdmissionIndex"))
     assert(inferred.isEmpty, s"warm q139 inferred index schemas: $inferred")
+    val counted = q139Jobs.flatMap(_._1).filter(_.startsWith("count at AdmissionIndex"))
+    assert(counted.isEmpty, s"warm q139 ran count jobs: $counted")
+    val sinkInferred = q148Jobs.flatMap(_._1)
+      .filter(_.startsWith("parquet at AdmissionIndex"))
+    assert(sinkInferred.isEmpty, s"q148 inferred a schema: $sinkInferred")
     val tableInferred = (q139Jobs ++ q148Jobs).flatMap(_._1)
       .filter(_.startsWith("parquet at Tables"))
     assert(tableInferred.isEmpty, s"q139/q148 inferred input-table schemas: $tableInferred")

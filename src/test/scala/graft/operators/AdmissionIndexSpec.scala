@@ -43,6 +43,30 @@ class AdmissionIndexSpec extends SparkSpec {
     d + "/idx"
   }
 
+  /** How many SQL executions `body` starts whose plan assigns probe
+    * chunks (the chunk id is pmod(xxhash64(doc id), k); nothing else on
+    * these paths hashes with xxhash64): non-zero exactly when a probe
+    * took the chunked path. */
+  private def chunkedExecutions(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains("xxhash64(") =>
+            n.incrementAndGet(); ()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graft.ListenerDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   test("build + probe: near-dup batch docs match their base twin, novel " +
     "and template-only docs are admitted (hot set filters the template)") {
     // hot needs df > max(maxDfFrac·|base|, DfFloorDocs = 25): 33 base
@@ -913,6 +937,64 @@ class AdmissionIndexSpec extends SparkSpec {
     assert(run() == got, "warm lifecycle re-run must be identical")
   }
 
+  test("front door picks each doc's best match on the driver: planted " +
+    "jaccard and cosine ties go to the lowest base id, and exact " +
+    "outranks near_dup outranks semantic — whole-batch and chunked alike") {
+    val sfDir = java.nio.file.Files
+      .createTempDirectory("graft-fd-ties").toString
+    val c = "river stone maple cedar willow birch aspen spruce larch alder " +
+      "rowan hazel poplar linden"
+    val d = "quartz granite basalt marble slate shale flint chalk jasper " +
+      "onyx agate opal garnet topaz"
+    val e = "violin cello viola harp flute oboe clarinet bassoon trumpet " +
+      "trombone tuba horn lute lyre"
+    // even ids = base, odd = batch; within each tie the HIGHER id is
+    // written first, so scan order cannot pick the winner
+    val docs = Seq(
+      (4L, s"$c lima"), (2L, s"$c mike"),     // near_dup tie for 5
+      (16L, d), (10L, d),                     // exact tie for 9 (one fp)
+      (18L, s"$e drum"),                      // near_dup of 11
+      (14L, "semantic anchor text about sailing boats and harbour tides"),
+      (22L, "plain base words about baking bread with rye and spelt flour"),
+      (20L, "more base words about cycling routes through alpine passes"),
+      (5L, s"$c november"),
+      (9L, d),                                // exact + near_dup + semantic
+      (11L, s"$e gong"),                      // near_dup + semantic
+      (13L, "batch text about chess openings and endgame studies today"),
+      (15L, "novel batch text on volcanic islands and coral reef ecology"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")))
+    docs.write.parquet(s"$sfDir/documents.parquet")
+    def unit(k: Int) = Array.tabulate(16)(i => if (i == k) 1f else 0f)
+    val half = math.sqrt(0.5).toFloat
+    Seq((2L, unit(2)), (4L, unit(3)), (10L, unit(4)), (16L, unit(5)),
+      (18L, unit(6)), (14L, unit(7)), (22L, unit(1)), (20L, unit(0)),
+      (5L, unit(8)), (9L, unit(7)), (11L, unit(7)),
+      // 13 sits halfway between 20 and 22: one cosine for both
+      (13L, Array.tabulate(16)(i => if (i < 2) half else 0f)),
+      (15L, unit(9)))
+      .map { case (id, v) => (id, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$sfDir/embeddings.parquet")
+    val AI = AdmissionIndex
+    val (dir, edir, fdir) = AI.ensureFrontDoorIndexes(spark, sfDir,
+      Dedup.DefaultThreshold, Dedup.DefaultMaxDfFrac, AI.EmbCentroids)
+    val incoming = graft.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 2 === 1)
+    def run(maxDocs: Long) = AI.frontDoorOn(incoming, spark, sfDir,
+      dir, edir, fdir, Dedup.DefaultThreshold, AI.EmbThreshold,
+      AI.EmbNProbe, maxDocs).as[(Long, String, Long)].collect().toSeq
+    val expected = Seq(
+      (5L, "near_dup", 2L),   // jaccard tie 2 vs 4
+      (9L, "exact", 10L),     // fp tie 10 vs 16; also near_dup and semantic
+      (11L, "near_dup", 18L), // also semantic (14)
+      (13L, "semantic", 20L), // cosine tie 20 vs 22
+      (15L, "admitted", -1L))
+    assert(run(AI.DefaultMaxDocsPerBatch) == expected)
+    assert(run(1L) == expected, "chunked tier 2 must pick the same winners")
+  }
+
   test("composed lifecycle replay after a PARTIAL fold commit: the " +
     "staged attribution keeps the admitted set stable (no self-reject " +
     "poisoning), and the missing folds re-commit with real rows") {
@@ -1142,11 +1224,19 @@ class AdmissionIndexSpec extends SparkSpec {
     val whole = collectPairs(
       AdmissionIndex.pairsVsIndexPruned(batch, dir, 0.5))
     assert(whole.nonEmpty, "fixture must produce pairs")
+    // within the budget: the single pruned probe, no chunk assignment
+    var single = Set.empty[(Long, Long, Double)]
+    assert(chunkedExecutions { single = collectPairs(
+      AdmissionIndex.pairsVsIndexChunked(batch, dir, 0.5)) } == 0,
+      "a batch within the budget must not chunk")
+    assert(single == whole)
     // maxDocs = 1 over 4 batch docs → ≥2 non-empty hash chunks (and
     // possibly empty ones — both shapes must be handled)
-    val chunked = collectPairs(
+    var chunked = Set.empty[(Long, Long, Double)]
+    assert(chunkedExecutions { chunked = collectPairs(
       AdmissionIndex.pairsVsIndexChunked(batch, dir, 0.5,
-        maxDocsPerBatch = 1L))
+        maxDocsPerBatch = 1L)) } > 0,
+      "the over-budget batch must take the chunked path")
     assert(chunked == whole,
       s"extra=${chunked -- whole} missing=${whole -- chunked}")
     // hashChunks partitions the batch: disjoint chunks, full cover
@@ -1195,9 +1285,16 @@ class AdmissionIndexSpec extends SparkSpec {
         .as[(Long, String, Long)].collect().toSet
       (staged, batch2)
     }
-    // batch1 = 5 docs; maxDocs = 2 → 3 hash chunks through the probe
-    val (stagedChunked, gateChunked) = run(maxDocs = 2L)
-    val (stagedSingle, gateSingle) = run(maxDocs = Long.MaxValue)
+    // batch1 = 5 docs, 4 of them signable; maxDocs = 2 → 2 hash chunks
+    // through the probe
+    var chunked: (Seq[(Long, String, Long)], Set[(Long, String, Long)]) = null
+    assert(chunkedExecutions { chunked = run(maxDocs = 2L) } > 0,
+      "the over-budget round must take the chunked path")
+    var single: (Seq[(Long, String, Long)], Set[(Long, String, Long)]) = null
+    assert(chunkedExecutions { single = run(maxDocs = Long.MaxValue) } == 0,
+      "a round within the budget must not chunk")
+    val (stagedChunked, gateChunked) = chunked
+    val (stagedSingle, gateSingle) = single
     assert(stagedChunked == stagedSingle,
       s"chunked=$stagedChunked single=$stagedSingle")
     assert(gateChunked == gateSingle,
