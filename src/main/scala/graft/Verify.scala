@@ -26,7 +26,10 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // the class and stack, not just getMessage: a java.nio file
+        // exception's message is the bare path
+        System.err.println(s"[verify] $name failed: $e")
+        e.printStackTrace()
         // a failing query must not leave a PREVIOUS run's parquet in
         // place — the driver compare would silently pass on stale results
         val dir = new java.io.File(s"$outDir/$name")

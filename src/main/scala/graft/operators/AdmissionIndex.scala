@@ -379,16 +379,6 @@ object AdmissionIndex {
     } finally sh0.unpersist(false)
   }
 
-  /** Per-ingest probe: verified cross pairs (a = batch doc, b = base
-    * doc, jac ≥ threshold), each pair once. Batch-side work is O(batch);
-    * base-side IO is the partition-pruned band scan (only buckets the
-    * batch's band keys hash into) plus the partition-pruned hset scan
-    * (only buckets the matched candidates' doc ids hash into). The two
-    * bucket collects are bounded by the bucket constants (≤64 ints
-    * each); the candidate materialization is the admission contract's
-    * matched set, O(batch) in the non-degenerate regime q26's tripwire
-    * family guards. The batch side is persisted and AQE broadcast-joins
-    * it against the pruned scans when small — the base never shuffles. */
   /** Union of one sub-table across every live index root, partition-
     * pruned to the touched bucket/cell ids — the shared scan shape of
     * every batch-side probe. */
@@ -450,6 +440,17 @@ object AdmissionIndex {
     best.toMap
   }
 
+  /** Per-ingest probe: verified cross pairs (a = batch doc, b = base
+    * doc, jac ≥ threshold), each pair once (its minimal matching band,
+    * row-local). Batch-side work is O(batch); base-side IO is the
+    * partition-pruned band scan (only buckets the batch's band keys
+    * hash into) plus the partition-pruned hset scan (only buckets the
+    * matched candidates' doc ids hash into). The two bucket collects
+    * are bounded by the bucket constants; the candidate
+    * materialization is the admission contract's matched set, O(batch)
+    * in the non-degenerate regime q26's tripwire family guards. The
+    * batch side is persisted and AQE broadcast-joins it against the
+    * pruned scans when small — the base never shuffles. */
   def probePairs(batch: DataFrame, dir: String,
                  threshold: Double = Dedup.DefaultThreshold): DataFrame = {
     val signed = signedBatch(batch, dir, threshold)
@@ -459,47 +460,19 @@ object AdmissionIndex {
   }
 
   /** [[probePairs]] from an ALREADY-SIGNED batch (the [[signedBatch]]
-    * shape; callers persist it — the frame is read by the band explode
+    * shape; callers persist it — the frame is read by the band manifest
     * AND the verify join). The lifecycle's shape: sign once, probe from
     * the signed frame, fold its anti-joined survivors via
     * [[appendGenerationSigned]] — one shingle+sign pass per ingest
-    * where the split ops pay two. */
+    * where the split ops pay two. The pruned probe of q134 and the
+    * front door ([[probeSignedPairs]], never chunked here), renamed to
+    * (a, b, jac) and materialized. */
   def probePairsSigned(signed: DataFrame, dir: String,
-                       threshold: Double = Dedup.DefaultThreshold): DataFrame = {
-    val spark = signed.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val (b, r) = Dedup.lshBanding(threshold)
-    val (bandBuckets, docBuckets) = readBucketCounts(dir)
-    val bandsB = bandRows(signed, b, r, bandBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    locally {
-      try {
-        val touched = bucketManifest(bandsB, col("band_bucket"))
-        val roots = GenerationStore.indexRoots(dir)
-        val baseBands = prunedUnion(spark, roots, "bands", "band_bucket", touched)
-        val cand = bandsB.as("x")
-          .join(baseBands.as("y"), Seq("band_key"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val candBuckets =
-            bucketManifest(cand, pmod(hash(col("b")), lit(docBuckets)))
-          val baseH = prunedUnion(spark, roots, "hsets", "doc_bucket", candBuckets)
-            .select(col("doc_id"), col("hset"))
-          // localCheckpoint (eager), NOT persist-and-leak: materializes
-          // the result here (so the input caches released below are
-          // never re-read) AND its blocks are reclaimed by the
-          // ContextCleaner once the returned frame is unreachable — a
-          // plain persist sits in the CacheManager until someone
-          // unpersists it, which leaked one cached result per ingest
-          // in a long-lived loop (r10 ADVICE)
-          Dedup.verifyJaccardTwoSided(cand, signed, baseH, threshold)
-            .localCheckpoint(true)
-        } finally cand.unpersist(false)
-      } finally bandsB.unpersist(false)
-    }
-  }
+                       threshold: Double = Dedup.DefaultThreshold): DataFrame =
+    probeSignedPairs(signed.select(col("doc_id").as("a"), col("hset").as("ha"),
+        col("sig").as("siga")), dir, threshold, Long.MaxValue,
+      DefaultProbeParallelism, DefaultChunkVerifyTimeout, checkpoint = true)(
+      _.select(col("batch_doc").as("a"), col("base_doc").as("b"), col("jac")))
 
   /** q133 driver form: ensure the base-side index for `sfDir` exists
     * (build is the amortized one-time stage; a warm second invocation
@@ -714,9 +687,17 @@ object AdmissionIndex {
     * levels per-chunk latency at the same total. xxhash64 is
     * codegen'd and deterministic, so a foreachBatch replay reproduces
     * the same chunks. Callers persist `batch` first — this counts it
-    * (n = batch rows; the sweep harness's serial form) and each chunk
-    * re-filters it. Returns the batch unsplit when it is already within
-    * the operating point. */
+    * and each chunk re-filters it. Returns the batch unsplit when it is
+    * already within the operating point.
+    *
+    * It sizes by batch ROWS on purpose: its caller is the fdchunk
+    * sweep's serial baseline, which splits the raw batch before any
+    * tier has signed it, so a signed-doc count would cost a
+    * shingle+sign pass the baseline does not otherwise run. The probe
+    * paths size by signed docs ([[chunkCount]]). The two counts differ
+    * only by the docs too short to sign, so at most the chunk count at
+    * a ceil boundary can differ, never the output (per-doc
+    * independence). */
   private[graft] def hashChunks(batch: DataFrame,
                                 maxDocs: Long): Seq[DataFrame] = {
     require(maxDocs > 0, s"maxDocsPerBatch must be positive, got $maxDocs")
@@ -733,13 +714,16 @@ object AdmissionIndex {
     * the front door's chunked tier-2 probe (r15 ADVICE: two drifting
     * copies would silently break the foreachBatch-replay
     * chunk-determinism claim and the sweep's serial-vs-deployed
-    * comparison). `n` is the batch's SIGNED doc count on the two probe
-    * paths, read off their band manifest ([[bandManifest]]: b band rows
-    * per signed doc), so sizing costs no job; docs too short to sign
-    * never reach the verify the chunks bound. The count is a function
-    * of the batch alone, so a replayed micro-batch chunks the same. */
+    * comparison). `n` is the batch's SIGNED doc count on the probe
+    * paths ([[probeSignedPairs]]), read off their band manifest
+    * ([[bandManifest]]: b band rows per signed doc), so sizing costs no
+    * job; docs too short to sign never reach the verify the chunks
+    * bound. [[hashChunks]] counts batch rows instead (see there). The
+    * count is a function of the batch alone, so a replayed micro-batch
+    * chunks the same. Written without `n + maxDocs` so that
+    * `maxDocs = Long.MaxValue` (never chunk) cannot overflow. */
   private[operators] def chunkCount(n: Long, maxDocs: Long): Int =
-    math.min(((n + maxDocs - 1) / maxDocs).toInt, 4096)
+    if (n <= maxDocs) 1 else math.min((n - 1) / maxDocs + 1, 4096L).toInt
 
   /** The deterministic chunk assignment every chunked path shares:
     * pmod(xxhash64(doc id), k) — codegen'd, replay-stable under
@@ -804,34 +788,41 @@ object AdmissionIndex {
     // output, and the probe's full-precision jac stays available to the
     // front door's best-match rank
     try probeSignedPairs(sigA, dir, threshold, maxDocsPerBatch,
-        probeParallelism, chunkVerifyTimeout)(_.localCheckpoint(true))
+        probeParallelism, chunkVerifyTimeout, checkpoint = true)(identity)
       .select(col("batch_doc"), col("base_doc"),
         round(col("jac"), 4).as("jaccard"))
     finally { sigA.unpersist(false); () }
   }
 
   /** The pair probe of a PERSISTED signed frame (cols a, ha, siga) at
-    * the operating point — the shared tier-2 body of
-    * [[pairsVsIndexChunked]] (q134/q148) and the front door: ONE band
-    * manifest job yields the touched buckets and the signed-doc count
-    * ([[bandManifest]]); a batch within `maxDocsPerBatch` signed docs
-    * runs the single pruned probe ([[signedPairsPlan]]), a larger one
-    * the shared-manifest chunked verify ([[chunkedPairsCore]]) with
-    * chunks assigned as [[hashChunks]] assigns them ([[chunkExpr]]).
-    * `use` consumes the pairs (batch_doc, base_doc, jac at full
-    * precision) before the probe's caches are released: the single path
-    * hands it the un-materialized plan, the chunked path the union of
-    * its materialized rounds (which q134/q148's checkpoint then copies
-    * once more: one job per oversized batch). */
+    * the operating point — the ONE signed-frame → pairs body, shared by
+    * [[pairsVsIndexChunked]] (q134/q148), [[probePairsSigned]] (q133,
+    * q137/q138) and the front door: ONE band manifest job yields the
+    * touched buckets and the signed-doc count ([[bandManifest]]); a
+    * batch within `maxDocsPerBatch` signed docs runs the single pruned
+    * probe ([[signedPairsPlan]]), a larger one the shared-manifest
+    * chunked verify ([[chunkedPairsCore]]) with chunks assigned as
+    * [[hashChunks]] assigns them ([[chunkExpr]]). `use` consumes the
+    * pairs (batch_doc, base_doc, jac at full precision) before the
+    * probe's caches are released. The chunked path hands it the union
+    * of its already-materialized rounds; the single path hands it the
+    * un-materialized plan, or with `checkpoint` the plan's eager
+    * `localCheckpoint` — NOT a persist: the checkpoint materializes the
+    * pairs before the input caches are released, and its blocks go
+    * back to the ContextCleaner once the returned frame is unreachable,
+    * where a plain persist sat in the CacheManager until someone
+    * unpersisted it (one leaked result per ingest in a long-lived loop,
+    * r10 ADVICE). */
   private def probeSignedPairs[T](sigA: DataFrame, dir: String,
       threshold: Double, maxDocsPerBatch: Long, parallelism: Int,
-      verifyTimeout: scala.concurrent.duration.FiniteDuration)
-      (use: DataFrame => T): T = {
+      verifyTimeout: scala.concurrent.duration.FiniteDuration,
+      checkpoint: Boolean)(use: DataFrame => T): T = {
     val (touched, signedDocs) = bandManifest(sigA, dir, threshold)
     val k = chunkCount(signedDocs, maxDocsPerBatch)
     if (k <= 1) {
       val (plan, release) = signedPairsPlan(sigA, dir, threshold, touched)
-      try use(plan) finally release()
+      try use(if (checkpoint) plan.localCheckpoint(true) else plan)
+      finally release()
     } else use(chunkedPairsCore(sigA.withColumn("chunk", chunkExpr(col("a"), k)),
       dir, threshold, k, parallelism, verifyTimeout, touched))
   }
@@ -1863,57 +1854,36 @@ object AdmissionIndex {
     } finally fps.unpersist(false)
   }
 
-  /** Exact-tier probe: (doc_id, exact_id) for every batch doc whose
-    * fingerprint the index has seen (base ∪ committed delta
-    * generations) — the persisted twin of q132's derived-table anti
-    * join, partition-pruned to the batch's own fp buckets
-    * (≤ min(|batch|, fpBuckets) directories read per root).
-    * `exact_id` = the lowest matching id ACROSS roots: each root
-    * stores its own per-fp minimum, so the cross-root min is the
-    * global attribution (base fps and delta fps are disjoint under the
-    * lifecycle discipline — a fp the base has is rejected, never
-    * folded — but the agg makes the probe correct for any fold). */
-  def fpProbe(batch: DataFrame, dir: String): DataFrame = {
-    val (df, release) = fpProbePlan(batch, dir)
-    try df.localCheckpoint(true)
-    finally release()
-  }
-
-  /** [[fpProbe]] before its eager checkpoint — the spec's plan-shape
-    * hook (the checkpointed frame no longer exposes the pruned scan);
-    * callers run `release()` after materializing. */
-  private[graft] def fpProbePlan(batch: DataFrame,
-                                 dir: String): (DataFrame, () => Unit) = {
-    val bf = fingerprinted(batch, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = fpMatches(bf, dir, bucketManifest(bf, col("fp_bucket")))
-      .groupBy(col("doc_id")).agg(min(col("bid")).as("exact_id"))
-    (out, () => { bf.unpersist(false); () })
-  }
-
   /** A batch's (doc_id, fp, fp_bucket) under `dir`'s fp layout. */
-  private def fingerprinted(batch: DataFrame, dir: String): DataFrame =
+  private[operators] def fingerprinted(batch: DataFrame, dir: String): DataFrame =
     batch.select(col("doc_id"), fpCol(col("text")).as("fp"))
       .withColumn("fp_bucket", pmod(hash(col("fp")), lit(readFpBuckets(dir))))
 
   /** Every (doc_id, bid) match of a [[fingerprinted]] batch against the
-    * fp rows of every live root, partition-pruned to `touched`. */
-  private def fpMatches(bf: DataFrame, dir: String,
+    * fp rows of every live root (base ∪ committed delta generations),
+    * partition-pruned to `touched` — the persisted twin of q132's
+    * derived-table anti join, reading ≤ min(|batch|, fpBuckets)
+    * directories per root. */
+  private[operators] def fpMatches(bf: DataFrame, dir: String,
                         touched: Array[Int]): DataFrame =
     bf.join(prunedUnion(bf.sparkSession, GenerationStore.indexRoots(dir),
         "fps", "fp_bucket", touched).select(col("fp"), col("bid")), Seq("fp"))
       .select(col("doc_id"), col("bid"))
 
-  /** The exact tier on the driver, for the front door: every batch doc
-    * id (one per batch row, in scan order) and each exact-matched doc's
-    * lowest base id — [[fpProbe]]'s answer. Two jobs and no shuffle: one
-    * collect of the batch's (doc_id, fp_bucket) rows, which is the ids
-    * and the fp-bucket manifest at once, and one collect of the pruned
-    * fp join's matches, reduced to min(bid) per doc on the driver
-    * ([[bestPerDoc]] with one score for all: ties go to the lowest id).
-    * Both collects hold a few longs per batch row. */
-  private def fpProbeOnDriver(batch: DataFrame,
-                              dir: String): (Array[Long], Map[Long, Long]) = {
+  /** The exact-tier probe, answered on the driver: every batch doc id
+    * (one per batch row, in scan order) and, for each doc whose
+    * fingerprint the index has seen, the lowest matching base id ACROSS
+    * roots. Each root stores its own per-fp minimum, so the cross-root
+    * min is the global attribution (base fps and delta fps are disjoint
+    * under the lifecycle discipline — a fp the base has is rejected,
+    * never folded — but the min makes the probe correct for any fold).
+    * Two jobs and no shuffle: one collect of the batch's (doc_id,
+    * fp_bucket) rows, which is the ids and the fp-bucket manifest at
+    * once, and one collect of [[fpMatches]], reduced to min(bid) per
+    * doc on the driver ([[bestPerDoc]] with one score for all: ties go
+    * to the lowest id). Both collects hold a few longs per batch row. */
+  private[operators] def fpProbeOnDriver(batch: DataFrame,
+      dir: String): (Array[Long], Map[Long, Long]) = {
     import batch.sparkSession.implicits._
     val bf = fingerprinted(batch, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2073,9 +2043,17 @@ object AdmissionIndex {
     * base_vec ASC`, both on the unrounded score). The attribution is
     * then built on the driver as one local frame (LocalRelation) of
     * (doc_id, tier, match_id), one row per batch row, sorted by doc_id.
-    * Size bound: three longs' worth per batch row, plus at most one
-    * (doc, match, score) row per doc and verify partition while a
-    * ranked tier is reduced. The frame reads no index and no batch, so
+    * Size bound: the driver holds O(batch rows), not O(chunk) — every
+    * batch doc id with its fp bucket, one entry per matched doc and
+    * tier (plus at most one (doc, match, score) row per doc and verify
+    * partition while a ranked tier is reduced) and the attribution's
+    * rows, a few hundred bytes per batch row in all; the attribution
+    * then ships inside the delivering tasks as local rows. Chunking
+    * bounds tier 2's verify-join width, not these. Measured against the
+    * tiers' previous shape up to a 75k-doc batch (the 30× fixture,
+    * ADMISSION_SWEEP_FDCHUNK_r17.json: same attribution, no separable
+    * change in time or peak RSS); batches of 250k docs and more are
+    * unmeasured. The frame reads no index and no batch, so
     * every index-reading leg has run when this returns and the
     * attribution stays correct if the caller folds into the indexes
     * before reading it. (A checkpointed frame would carry its source
@@ -2128,7 +2106,8 @@ object AdmissionIndex {
       }
       val nd = probeSignedPairs(signed1.select(col("doc_id").as("a"),
           col("hset").as("ha"), col("sig").as("siga")), dir, threshold,
-        maxDocsPerBatch, probeParallelism, DefaultChunkVerifyTimeout)(bestPerDoc)
+        maxDocsPerBatch, probeParallelism, DefaultChunkVerifyTimeout,
+        checkpoint = false)(bestPerDoc)
       def awaited[T](f: Future[T], tier: String): T =
         try Await.result(f, DefaultChunkVerifyTimeout)
         catch {

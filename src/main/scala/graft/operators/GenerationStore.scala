@@ -375,11 +375,16 @@ object GenerationStore {
   /** Delete superseded generations of `keep`'s family (old corpus or
     * old layout), then reap crashed builds' scratch dirs old enough (6h)
     * that no live process can still be writing them. */
-  private def sweepStale(keep: String): Unit = {
+  private[operators] def sweepStale(keep: String): Unit = {
     sweepSiblings(Paths.get(keep))
     val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
     list(Paths.get(indexRoot, ".tmp")).foreach { c =>
-      if (Files.getLastModifiedTime(c).toMillis < cutoff) deleteRec(c)
+      // a sibling family's live build may publish (rename away) its
+      // scratch dir between the listing and this stat: not stale
+      val stale =
+        try Files.getLastModifiedTime(c).toMillis < cutoff
+        catch { case _: java.nio.file.NoSuchFileException => false }
+      if (stale) deleteRec(c)
     }
   }
 

@@ -160,11 +160,14 @@ class AdmissionIndexSpec extends SparkSpec {
     // filter would emit duplicates here)
     assert(streamShaped.length == streamShaped.distinct.length,
       "pairs must be emitted exactly once")
-    val viaDistinct = AdmissionIndex.probePairs(batch, dir, threshold = 0.5)
+    // the partition-pruned batch probe answers the same, once per pair
+    val pruned = AdmissionIndex.probePairs(batch, dir, threshold = 0.5)
       .select(col("a"), col("b"), round(col("jac"), 4))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(streamShaped.toSet == viaDistinct.toSet,
-      s"${streamShaped.toSet} != ${viaDistinct.toSet}")
+    assert(pruned.length == pruned.distinct.length,
+      "the pruned probe must emit each pair once too")
+    assert(streamShaped.toSet == pruned.toSet,
+      s"${streamShaped.toSet} != ${pruned.toSet}")
   }
 
   test("pairsVsIndex runs as a Structured Streaming query (2 micro-" +
@@ -780,6 +783,16 @@ class AdmissionIndexSpec extends SparkSpec {
       "a compacted generation's genKey must stay committed")
   }
 
+  test("chunkCount is ceil(n / maxDocs) capped at 4096, and never " +
+    "chunks under maxDocs = Long.MaxValue") {
+    val cc = AdmissionIndex.chunkCount _
+    assert(Seq(cc(0L, 10L), cc(10L, 10L), cc(11L, 10L), cc(20L, 10L),
+      cc(21L, 10L)) == Seq(1, 1, 2, 2, 3))
+    assert(cc(Long.MaxValue, 1L) == 4096)
+    assert(Seq(1L, 2L, 250000L, Long.MaxValue)
+      .forall(n => cc(n, Long.MaxValue) == 1))
+  }
+
   test("fp index: exact-tier probe matches normalized dups with " +
     "lowest-id attribution, misses novels, pruned scan") {
     // 40 distinct base docs so all 16 fp buckets are populated (the
@@ -798,38 +811,40 @@ class AdmissionIndexSpec extends SparkSpec {
       (103L, "unique base document number 7 about topic t7"),
       (105L, "a novel incoming document the base has never seen")
     ).toDF("doc_id", "text")
-    val got = AdmissionIndex.fpProbe(batch, dir)
-      .as[(Long, Long)].collect().toSet
-    assert(got == Set((101L, 20L), (103L, 14L)),
-      s"fp probe got $got") // 101 → lowest of {20, 22}; 105 admitted
+    val (ids, exact) = AdmissionIndex.fpProbeOnDriver(batch, dir)
+    assert(ids.sorted.toSeq == Seq(101L, 103L, 105L), ids.toSeq.toString)
+    assert(exact.toSet == Set((101L, 20L), (103L, 14L)),
+      s"fp probe got $exact") // 101 → lowest of {20, 22}; 105 admitted
     // plan shape: the fps scan is metadata-pruned to touched buckets
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val (planDf, release) = AdmissionIndex.fpProbePlan(batch, dir)
-      try {
-        assert(planDf.collect().length == 2)
-        val scans = planDf.queryExecution.executedPlan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.filter(_.relation.location.rootPaths
-          .exists(_.toString.contains("/fps")))
-        assert(scans.nonEmpty && scans.forall(_.partitionFilters.nonEmpty),
-          "fp_bucket predicate must be a PartitionFilter")
-        val readParts = scans.map(_.metrics("numPartitions").value).sum
-        val totalParts = {
-          val s = java.nio.file.Files.list(
-            java.nio.file.Paths.get(dir, "fps"))
-          try {
-            var n = 0
-            val it = s.iterator()
-            while (it.hasNext) {
-              if (it.next().getFileName.toString.contains("=")) n += 1
-            }
-            n
-          } finally s.close()
-        }
-        assert(readParts < totalParts,
-          s"fps scan read $readParts of $totalParts partitions — not pruned")
-      } finally release()
+      val bf = AdmissionIndex.fingerprinted(batch, dir)
+      val touched = bf.select("fp_bucket").as[Int].collect().distinct.sorted
+      val planDf = AdmissionIndex.fpMatches(bf, dir, touched)
+      // the build stored one bid per fp, already the lowest (20 of 20/22)
+      assert(planDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        Set((101L, 20L), (103L, 14L)))
+      val scans = planDf.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.filter(_.relation.location.rootPaths
+        .exists(_.toString.contains("/fps")))
+      assert(scans.nonEmpty && scans.forall(_.partitionFilters.nonEmpty),
+        "fp_bucket predicate must be a PartitionFilter")
+      val readParts = scans.map(_.metrics("numPartitions").value).sum
+      val totalParts = {
+        val s = java.nio.file.Files.list(
+          java.nio.file.Paths.get(dir, "fps"))
+        try {
+          var n = 0
+          val it = s.iterator()
+          while (it.hasNext) {
+            if (it.next().getFileName.toString.contains("=")) n += 1
+          }
+          n
+        } finally s.close()
+      }
+      assert(readParts < totalParts,
+        s"fps scan read $readParts of $totalParts partitions — not pruned")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -1117,12 +1132,11 @@ class AdmissionIndexSpec extends SparkSpec {
     AdmissionIndex.buildFpIndex(base, dir)
     val novel = Seq((1001L, "a brand new admitted document"))
       .toDF("doc_id", "text")
-    assert(AdmissionIndex.fpProbe(novel, dir).count() == 0)
+    assert(AdmissionIndex.fpProbeOnDriver(novel, dir)._2.isEmpty)
     AdmissionIndex.fpAppendGeneration(novel, dir, "fp-spec-g1")
     val copy = Seq((2001L, "A  brand NEW admitted\tdocument"))
       .toDF("doc_id", "text")
-    def probeCopy() = AdmissionIndex.fpProbe(copy, dir)
-      .as[(Long, Long)].collect().toSet
+    def probeCopy() = AdmissionIndex.fpProbeOnDriver(copy, dir)._2.toSet
     assert(probeCopy() == Set((2001L, 1001L)), probeCopy().toString)
     // idempotent re-fold
     AdmissionIndex.fpAppendGeneration(novel, dir, "fp-spec-g1")

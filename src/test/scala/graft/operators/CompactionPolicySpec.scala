@@ -94,8 +94,7 @@ class CompactionPolicySpec extends SparkSpec {
     assert(AdmissionIndex.liveGenerations(dir) == maxGens)
     val copy = Seq((5001L, "Brand  NEW admitted document number 1"))
       .toDF("doc_id", "text")
-    def probe() = AdmissionIndex.fpProbe(copy, dir)
-      .as[(Long, Long)].collect().toSet
+    def probe() = AdmissionIndex.fpProbeOnDriver(copy, dir)._2.toSet
     val before = probe()
     assert(before == Set((5001L, 1002L)), before.toString)
     assert(AdmissionIndex.maybeCompact(spark, dir, maxGens))

@@ -213,6 +213,33 @@ class GenerationStoreSpec extends SparkSpec {
       "a non-race failure must leave the fresh build intact")
   }
 
+  // ---- sweepStale(): reaping scratch dirs beside live builds ----------
+
+  test("the stale-scratch sweep skips a scratch dir that a live build " +
+    "publishes between the listing and the stat") {
+    val root = Files.createTempDirectory("graft-sweep-race")
+    val keep = root.resolve("aaaa-bbbb-cccc").toString
+    val published = root.resolve("published")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    // another family's builds: a scratch dir appears under the index
+    // root's .tmp and is renamed away (published) right after
+    val builder = new Thread(() =>
+      try {
+        while (!stop.get()) {
+          val tmp = Paths.get(GenerationStore.scratchDir(
+            GenerationStore.indexRoot, "sweep-race"))
+          Files.createDirectories(tmp)
+          Files.move(tmp, published)
+          Files.delete(published)
+        }
+      } catch { case e: Throwable => failed.set(e) })
+    builder.start()
+    try (0 until 3000).foreach(_ => GenerationStore.sweepStale(keep))
+    finally { stop.set(true); builder.join() }
+    assert(failed.get() == null, s"the builder failed: ${failed.get()}")
+  }
+
   private def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
