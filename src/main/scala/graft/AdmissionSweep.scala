@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.Paths
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.GenerationStore.deleteRec
+import Harness.timed
 
 /** Scale evidence for the persisted admission index (q133): per-ingest
   * probe cost must stay ~flat while the BASE corpus grows 10× → 100×,
@@ -37,56 +40,29 @@ import org.apache.spark.sql.functions._
   * rejects; cell containment makes them found-by-construction). */
 object AdmissionSweep {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val out = sys.env.getOrElse("SPARK_GRAFT_SWEEP_OUT", "ADMISSION_SWEEP.json")
     val bases = if (args.nonEmpty) args.toSeq else Seq(
       "/root/repo/scaledata/sf1skew",
       "/root/repo/scaledata/sf3skew",
       "/root/repo/scaledata/sf10skew")
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("embgens")) {
-      embGensSweep(spark, out)
-      spark.stop()
-      return
+    val spark = Harness.session()
+    val fixture = args.headOption.getOrElse(bases.last)
+    sys.env.get("SPARK_GRAFT_SWEEP_MODE") match {
+      case Some("embgens") => embGensSweep(spark, out)
+      case Some("emb") => embSweep(spark, out)
+      case Some("gens") => gensSweep(spark, out, bases.head)
+      case Some("fdchunk") => fdChunkSweep(spark, out, fixture)
+      case Some("chunk") => chunkSweep(spark, out, fixture)
+      case Some("fdlife") => fdLifeSweep(spark, out, bases.head)
+      case Some("fd") => fdSweep(spark, out, bases)
+      case _ => baseSweep(spark, out, bases)
     }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("emb")) {
-      embSweep(spark, out)
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("gens")) {
-      gensSweep(spark, out, bases.head)
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("fdchunk")) {
-      fdChunkSweep(spark, out,
-        if (args.nonEmpty) args.head else "/root/repo/scaledata/sf10skew")
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("chunk")) {
-      chunkSweep(spark, out,
-        if (args.nonEmpty) args.head else "/root/repo/scaledata/sf10skew")
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("fdlife")) {
-      fdLifeSweep(spark, out, bases.head)
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SWEEP_MODE").contains("fd")) {
-      fdSweep(spark, out, bases)
-      spark.stop()
-      return
-    }
+    spark.stop()
+  }
+
+  /** The default sweep: q133's build once and best-of-2 probe per base. */
+  private def baseSweep(spark: SparkSession, out: String,
+                        bases: Seq[String]): Unit = {
     // optional square bucket-count override (e.g. 1024): the sweep then
     // measures the probe on a non-default layout — the sizing-policy
     // robustness artifact (r10 verdict item 5)
@@ -103,13 +79,9 @@ object AdmissionSweep {
       .withColumn("doc_id", col("doc_id") * 2 + 10000000001L)
       .withColumn("text", concat(col("text"), lit(" sweepmarker")))
       .persist()
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // warm-up: pay JIT/codegen once against the small driver fixture so
     // the FIRST measured build is not inflated by one-time session cost
-    {
+    locally {
       val wdir = graft.operators.AdmissionIndex
         .ensureIndex(spark, "/root/testdata/sf0.01")
       val wb = batchFor("/root/testdata/sf0.01")
@@ -126,10 +98,7 @@ object AdmissionSweep {
       // build number must be the real one-time cost, not a cache hit)
       val idxDir = graft.operators.AdmissionIndex.indexDirFor(
         s"$dir/documents.parquet", 0.5, 0.1, bkOverride)
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(idxDir))
+      deleteRec(Paths.get(idxDir))
       val (_, buildSec) = timed(
         graft.operators.AdmissionIndex.ensureIndex(spark, dir,
           buckets = bkOverride))
@@ -151,7 +120,7 @@ object AdmissionSweep {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (lines.mkString("[", ",\n", "]") + "\n").getBytes("UTF-8"))
-    spark.stop()
+    ()
   }
 
   /** Composed-LIFECYCLE sweep (the q143 ingest loop, end to end): the
@@ -173,10 +142,6 @@ object AdmissionSweep {
     val AI = graft.operators.AdmissionIndex
     val Rounds = 16
     val record = Set(1, 2, 4, 8, 16)
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def batchFor(dir: String, round: Int) = {
       val docs = graft.Tables.documents(spark, dir)
       val evens = docs.filter(col("doc_id") % 2 === 0)
@@ -212,9 +177,6 @@ object AdmissionSweep {
       wb.unpersist(false)
       ()
     }
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-    }
     // fresh family: builds must be real one-time costs, and prior
     // sweep generations must not leak into round 1
     Seq(
@@ -224,7 +186,7 @@ object AdmissionSweep {
       AI.embIndexDirFor(s"$baseDir/embeddings.parquet", AI.EmbCentroids,
         2, "fdlife"),
       AI.fpIndexDirFor(s"$baseDir/documents.parquet", 2, "fdlife"))
-      .foreach(d => rm(new java.io.File(d)))
+      .foreach(d => deleteRec(Paths.get(d)))
     val (dirs, buildSec) = timed(ensureAll(baseDir))
     val (dir, edir, fdir) = dirs
     val baseDocs = graft.Tables.documents(spark, baseDir)
@@ -320,10 +282,6 @@ object AdmissionSweep {
   private def chunkSweep(spark: SparkSession, out: String,
                          sfDir: String): Unit = {
     val AI = graft.operators.AdmissionIndex
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // warm-up: JIT/codegen once, outside the timings
     locally {
       val wdir = AI.ensureIndex(spark, "/root/testdata/sf0.01")
@@ -428,10 +386,6 @@ object AdmissionSweep {
   private def fdChunkSweep(spark: SparkSession, out: String,
                            sfDir: String): Unit = {
     val AI = graft.operators.AdmissionIndex
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // warm-up: JIT/codegen once against the small driver fixture
     locally {
       val wdocs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
@@ -551,13 +505,6 @@ object AdmissionSweep {
   private def fdSweep(spark: SparkSession, out: String,
                       bases: Seq[String]): Unit = {
     val AI = graft.operators.AdmissionIndex
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-    }
     def batchFor(dir: String) = {
       val docs = graft.Tables.documents(spark, dir)
       val evens = docs.filter(col("doc_id") % 2 === 0)
@@ -591,7 +538,7 @@ object AdmissionSweep {
       Seq(AI.indexDirFor(s"$dir/documents.parquet", 0.5, 0.1),
           AI.embIndexDirFor(s"$dir/embeddings.parquet", AI.EmbCentroids),
           AI.fpIndexDirFor(s"$dir/documents.parquet"))
-        .foreach(d => rm(new java.io.File(d)))
+        .foreach(d => deleteRec(Paths.get(d)))
       val (_, buildSec) = timed {
         AI.ensureIndex(spark, dir)
         AI.ensureEmbIndex(spark, dir)
@@ -635,13 +582,6 @@ object AdmissionSweep {
     val AI = graft.operators.AdmissionIndex
     val Rounds = 32
     val record = Set(1, 2, 4, 8, 16, 32)
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-    }
     def batchFor(round: Int) = {
       val planted = Tables.documents(spark, baseDir)
         .filter(col("doc_id") % 2 === 0)
@@ -663,7 +603,7 @@ object AdmissionSweep {
     }
     // fresh index (the build must be real, not a cache hit)
     val idxDir = AI.indexDirFor(s"$baseDir/documents.parquet", 0.5, 0.1)
-    rm(new java.io.File(idxDir))
+    deleteRec(Paths.get(idxDir))
     // warm-up on the driver fixture (JIT/codegen outside the timings)
     locally {
       val wdir = AI.ensureIndex(spark, "/root/testdata/sf0.01")
@@ -738,10 +678,6 @@ object AdmissionSweep {
     val centroids = math.max(16, math.sqrt(baseN.toDouble).toInt)
     val Rounds = 32
     val record = Set(1, 2, 4, 8, 16, 32)
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def baseVecExpr =
       s"transform(sequence(0, ${dims - 1}), i -> CAST(sin(CAST(vec_id AS DOUBLE) * 13.0 + CAST(i AS DOUBLE) * 7.0) AS FLOAT))"
     def baseFor(n: Long) = spark.range(n).select((col("id") * 2).as("vec_id"))
@@ -844,12 +780,8 @@ object AdmissionSweep {
       // exact copy of an even base vector, remapped to a disjoint odd id
       .withColumn("vec_id", col("vec_id") + 10000000001L)
       .persist()
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // warm-up (JIT/codegen) against a tiny corpus
-    {
+    locally {
       val wdir = java.nio.file.Files
         .createTempDirectory("graft-embsweep-warm").toString + "/idx"
       graft.operators.AdmissionIndex.embBuildIndex(baseFor(2000), wdir, 16)

@@ -1,7 +1,11 @@
 package graft
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.LongAdder
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import operators.GenerationStore.jsonQuote
+import operators.StageMemo
 
 object Bench {
 
@@ -11,9 +15,9 @@ object Bench {
     * bytes read/written and executor run time, accumulated across stages
     * and snapshotted per query. */
   private final class IoListener extends SparkListener {
-    val read = new java.util.concurrent.atomic.LongAdder
-    val write = new java.util.concurrent.atomic.LongAdder
-    val runMs = new java.util.concurrent.atomic.LongAdder
+    val read = new LongAdder
+    val write = new LongAdder
+    val runMs = new LongAdder
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val m = sc.stageInfo.taskMetrics
       if (m != null) {
@@ -22,26 +26,17 @@ object Bench {
         runMs.add(m.executorRunTime)
       }
     }
+    def snapshot: (Long, Long, Long) = (read.sum, write.sum, runMs.sum)
   }
+
+  /** One query's artifact entry: its best (or failing) attempt's time
+    * and that attempt's shuffle bytes and executor run time. */
+  private final case class Row(name: String, sec: Double, read: Long,
+                               write: Long, runMs: Long, failed: Boolean)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    // default WARN; SPARK_GRAFT_LOG=INFO turns on DAGScheduler job lines
-    // ("Job N finished: <callsite>, took X ms") for per-job attribution
-    // of a query's wall time in isolated profiling runs (guide §1) —
-    // output format and timing methodology unchanged
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    // install the TopK rewrite session-wide (idempotent): q09/q63 install
-    // it lazily, which would otherwise make every LATER row_number<=k
-    // query's plan depend on execution order — installed-up-front, all
-    // runs (full or filtered) plan identically
-    plans.TopKInstall.install(spark)
+    val spark = Harness.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
     // warm-up: pay JIT/codegen-compiler/session initialization once,
@@ -79,11 +74,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.exists(n.startsWith) }
-    // minimal JSON string escaping for the env-sourced path (Verify.q
-    // does the full version; paths only need backslash + quote)
-    val sfEsc = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
+    val (queries, unmatched) = Harness.selected(only)
     // FULL artifact (exact times + per-query shuffle io) → file; the
     // committed BENCH.json is the canonical per-round record. Written
     // incrementally (atomic tmp+move) after EVERY query: a best-of-2
@@ -92,86 +83,73 @@ object Bench {
     // "partial":true) rather than nothing. The final write drops the
     // marker — same artifact shape as always.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    def writeArtifact(res: Seq[(String, Double, Long, Long, Long, Boolean)],
-                      partial: Boolean): Unit = {
-      val qs = res.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val ios = res.map { case (k, _, r, w, m, _) =>
-        s"\"$k\":{\"shuffle_read_mb\":${r / 1e6},\"shuffle_write_mb\":${w / 1e6},\"executor_run_ms\":$m}"
+    val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
+    // a failed query must be VISIBLE in the artifact — a swallowed
+    // exception with a near-zero time otherwise reads as a speedup
+    def failedArr = acc.filter(_.failed).map(r => jsonQuote(r.name))
+      .mkString("[", ",", "]")
+    def writeArtifact(): Unit = {
+      val qs = acc.map(r => s"${jsonQuote(r.name)}:${r.sec}").mkString("{", ",", "}")
+      val ios = acc.map { r =>
+        s"${jsonQuote(r.name)}:{\"shuffle_read_mb\":${r.read / 1e6},\"shuffle_write_mb\":${r.write / 1e6},\"executor_run_ms\":${r.runMs}}"
       }.mkString("{", ",", "}")
-      // a failed query must be VISIBLE in the artifact — a swallowed
-      // exception with a near-zero time otherwise reads as a speedup
-      val failedArr = res.collect { case (k, _, _, _, _, true) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val partialKey = if (partial) "\"partial\":true," else ""
+      val partialKey = if (acc.size < queries.size) "\"partial\":true," else ""
       // provenance keys: a single-run or name-filtered artifact must be
       // distinguishable from the canonical full-suite best-of-N record —
       // without these, cross-round comparisons against differently-
       // configured artifacts are silently apples-to-oranges
       val onlyKey =
-        if (only.isEmpty) ""
-        else only.map(o => "\"" + o + "\"").mkString("\"only\":[", ",", "],")
-      val json = s"""{"metric":"total","value":${res.map(_._2).sum},"unit":"sec",$partialKey"runs":$runs,$onlyKey"queries":$qs,"io":$ios,"failed":$failedArr,"sf":"$sfEsc"}"""
-      val tmp = java.nio.file.Paths.get(out + ".tmp")
-      java.nio.file.Files.write(tmp, (json + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(out),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        if (only.isEmpty) "" else only.map(jsonQuote).mkString("\"only\":[", ",", "],")
+      val json = s"""{"metric":"total","value":${acc.map(_.sec).sum},"unit":"sec",$partialKey"runs":$runs,$onlyKey"queries":$qs,"io":$ios,"failed":$failedArr,"sf":${jsonQuote(sfDir)}}"""
+      val tmp = Paths.get(out + ".tmp")
+      Files.write(tmp, (json + "\n").getBytes("UTF-8"))
+      Files.move(tmp, Paths.get(out),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
       ()
     }
-    val acc = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Long, Long, Long, Boolean)]
-    selected.foreach { case (name, fn) =>
-      var best: (Double, Long, Long, Long) = null
-      var failed = false
-      var failSec = 0.0
-      var attempt = 0
-      var touched: graft.operators.StageMemo.Touched = null
-      while (attempt < runs && !failed) {
-        // pay accumulated session garbage OUTSIDE the timing: without
-        // this, measured multi-query sessions inflate individual queries
-        // up to 3x their isolated warm time (GC debt lands on whoever
-        // runs next)
-        System.gc()
-        // drain async listener delivery so stage metrics attribute to
-        // the attempt that actually ran them
-        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-        val (r0, w0, m0) = (io.read.sum, io.write.sum, io.runMs.sum)
-        val t0 = System.nanoTime()
-        def execute(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(); () }
-        try {
-          if (attempt == 0)
-            touched = graft.operators.StageMemo.recording(execute())._2
-          else {
-            if (touched != null) graft.operators.StageMemo.invalidate(touched)
-            execute()
+    val failed = Harness.eachQuery("bench", queries) { (name, fn) =>
+      var best: Row = null
+      var sec = 0.0
+      var done = false
+      var touched: StageMemo.Touched = null
+      def execute(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(); () }
+      try {
+        for (attempt <- 0 until runs) {
+          // pay accumulated session garbage OUTSIDE the timing: without
+          // this, measured multi-query sessions inflate individual queries
+          // up to 3x their isolated warm time (GC debt lands on whoever
+          // runs next)
+          System.gc()
+          // drain async listener delivery so stage metrics attribute to
+          // the attempt that actually ran them
+          ListenerDrain.drain(spark.sparkContext)
+          val (r0, w0, m0) = io.snapshot
+          val t0 = System.nanoTime()
+          try {
+            if (attempt == 0) touched = StageMemo.recording(execute())._2
+            else {
+              if (touched != null) StageMemo.invalidate(touched)
+              execute()
+            }
+          } finally {
+            sec = (System.nanoTime() - t0) / 1e9
+            ListenerDrain.drain(spark.sparkContext)
           }
-        } catch { case NonFatal(t) =>
-          System.err.println(s"[bench] $name FAILED (attempt ${attempt + 1}): " +
-            t.getMessage)
-          // ANY failing attempt marks the query failed — a
-          // nondeterministic error must be visible, not averaged away
-          failed = true
+          val (r1, w1, m1) = io.snapshot
+          if (best == null || sec < best.sec)
+            best = Row(name, sec, r1 - r0, w1 - w0, m1 - m0, failed = false)
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-        if (!failed && (best == null || sec < best._1))
-          best = (sec, io.read.sum - r0, io.write.sum - w0, io.runMs.sum - m0)
-        else if (failed) failSec = sec
-        attempt += 1
+        done = true
+      } finally {
+        // ANY failing attempt marks the query failed — a nondeterministic
+        // error must be visible, not averaged away — and records the
+        // failing attempt's ELAPSED time, not 0.0: a zero would read as a
+        // speedup in the total unless the reader cross-checks `failed`
+        acc += (if (done) best else Row(name, sec, 0L, 0L, 0L, failed = true))
+        writeArtifact()
       }
-      // a failed query records the failing attempt's ELAPSED time, not
-      // 0.0 — a zero would read as a speedup in the total unless the
-      // reader cross-checks the failed array (the exact hazard the
-      // artifact's failed key exists to prevent)
-      if (best == null) best = (failSec, 0L, 0L, 0L)
-      acc += ((name, best._1, best._2, best._3, best._4, failed))
-      writeArtifact(acc.toSeq, partial = acc.size < selected.size)
     }
-    val results = acc.toSeq
-    val total = results.map(_._2).sum
-    val failedArr = results.collect { case (k, _, _, _, _, true) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val total = acc.map(_.sec).sum
     // stdout gets a COMPACT single line instead: the driver snapshots only
     // a ~2,000-char tail of the run, and the full line (~10 KB with the io
     // map) overflowed it, leaving BENCH_r*.json with "parsed": null — no
@@ -179,14 +157,13 @@ object Bench {
     // keys (the numbering is unique by construction) + 3-decimal times
     // keep all 93 queries + total + failures within ~1.4 KB, so the tail
     // parses even with sbt's trailing "[success]" line.
-    val shortQs = results.map { case (k, v, _, _, _, _) =>
-      "\"" + k.takeWhile(_ != '_') + f"""":$v%.3f""" }
+    val shortQs = acc.map(r => "\"" + r.name.takeWhile(_ != '_') + f"""":${r.sec}%.3f""")
       .mkString("{", ",", "}")
-    require(results.map(_._1.takeWhile(_ != '_')).distinct.size == results.size,
+    require(acc.map(_.name.takeWhile(_ != '_')).distinct.size == acc.size,
       "short query keys must stay unique")
-    // same escaping as sfDir: the output path is env-sourced too
-    val outEsc = out.replace("\\", "\\\\").replace("\"", "\\\"")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$shortQs,"failed":$failedArr,"sf":"$sfEsc","detail":"$outEsc full names + per-query shuffle io"}""")
+    val detail = jsonQuote(s"$out full names + per-query shuffle io")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$shortQs,"failed":$failedArr,"sf":${jsonQuote(sfDir)},"detail":$detail}""")
     spark.stop()
+    Harness.exitOn("bench", failed, unmatched)
   }
 }

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Measurement tool (optimization guide §1.2/§7.2): dump
   * `.explain("formatted")` for declared queries to files, so plan claims
   * (Exchange count, join strategy, PushedFilters/ReadSchema) are
-  * checkable without running Spark. Same session shape as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, TopK rule
-  * installed up front) so the dumped plan is the benched plan.
+  * checkable without running Spark. Same session as Bench
+  * ([[Harness.session]]) so the dumped plan is the benched plan.
   *
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_PLAN_OUT=plans/r16 \
   *     sbt "runMain graft.PlanDump q143 q144"        // name prefixes
@@ -21,42 +21,17 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "plans/r16")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    plans.TopKInstall.install(spark)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
-    var failed = 0
-    selected.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-          txt.getBytes("UTF-8"))
-        println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
-      } catch { case scala.util.control.NonFatal(t) =>
-        // NonFatal only (r16 ADVICE): an OOM/fatal error must crash the
-        // dump, not read as one more FAILED line; and any failure makes
-        // the exit code nonzero so a scripted consumer can tell a
-        // complete dump from a partial one
-        failed += 1
-        System.err.println(s"[plandump] $name FAILED: ${t.getMessage}")
-      }
+    val spark = Harness.session()
+    Files.createDirectories(Paths.get(outDir))
+    val (queries, unmatched) = Harness.selected(args.toSeq)
+    val failed = Harness.eachQuery("plandump", queries) { (name, fn) =>
+      val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), txt.getBytes("UTF-8"))
+      println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
     }
     spark.stop()
-    if (failed > 0) {
-      System.err.println(s"[plandump] $failed quer${if (failed == 1) "y" else "ies"} failed")
-      sys.exit(1)
-    }
+    Harness.exitOn("plandump", failed, unmatched)
   }
 }

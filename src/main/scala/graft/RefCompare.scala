@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-node throughput comparison against the reference engine's
   * wordcount kernel (scripts/ref_kernel_bench.py drives the reference's
   * own map/shuffle/reduce functions from tasks/example_wordcount.py over
@@ -30,21 +28,11 @@ object RefCompare {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val mode = if (args.length > 2) args(2) else "wordcount"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    val cpus = Harness.cpus
     def timeBest(run: () => Unit): Double = {
       run() // warm-up
-      (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      (1 to reps).map(_ => Harness.timed(run())._2).min
     }
     mode match {
       case "accident" =>

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session tuning for every graft entry point (Bench, Verify,
-  * PlanDump, sweep harnesses) — measured, not guessed (guide §1, §9;
-  * evidence in OPTIMIZATION_r17.md).
+/** Shared session tuning for every graft entry point (each built by
+  * [[Harness.builder]]) and for the benchmark runner — measured, not
+  * guessed (guide §1, §9; evidence in OPTIMIZATION_r17.md).
   *
   * `spark.shuffle.sort.bypassMergeThreshold`: Spark picks the
   * BypassMergeSortShuffleWriter whenever a shuffle has ≤200 reduce
@@ -20,13 +20,14 @@ import org.apache.spark.sql.SparkSession
   * TLB shootdowns), measured as a ~65 ms FIXED executor cost per
   * shuffle-writing task regardless of data volume — the dominant term
   * of every aggregate stage at fixture scale (groupBy fragment: 6.5 s
-  * executor time → 1.5 s with the sort writer; ProfileProbe).
+  * executor time → 1.5 s with the sort writer; measured with the
+  * fragment profiler `graft.tools.ProfileProbe`, last present in
+  * commit dc46c54).
   *
   * Production-scale behavior is UNCHANGED by construction: real
   * deployments run reshuffles wider than 200 partitions, where Spark
   * already takes the SortShuffleWriter path this setting forces — the
   * local bench now exercises the same writer the 100 TB plan would.
-  * Env-overridable for A/B measurement.
   *
   * Generated-code reuse: a long-lived session compiles each distinct
   * generated class once. Spark's `CodeGenerator.compile` memoizes
@@ -58,9 +59,10 @@ import org.apache.spark.sql.SparkSession
   * 4.08 s → 0 on `admission` and 1.39 s → 0 on `curation`
   * (OPTIMIZATION_r17.md, "Generated-code reuse"); `CodegenReuseSpec`
   * holds the line. None of the three changes a plan. The first two are
-  * static, read when the JVM's first session is built. They have no environment
-  * override: the only alternative they could select is recompiling,
-  * and a knob would let one entry point drift from the others. */
+  * static, read when the JVM's first session is built. No setting here
+  * has an environment override: the only alternative each could select
+  * is the slower path, and a knob would let one entry point drift from
+  * the others. */
 object SessionDefaults {
   /** Codegen cache bound. One full `graft.Bench` attempt (148 queries,
     * sf0.1, local[4]) compiles ~2,100 distinct classes, ~525 per Guava
@@ -69,8 +71,7 @@ object SessionDefaults {
   val CodegenCacheEntries = 4000
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")

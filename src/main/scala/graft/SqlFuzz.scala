@@ -544,24 +544,19 @@ object SqlFuzz {
   * `scripts/check.py <sfDir> <outDir>` hash-compares every generated
   * query against DuckDB. Usage: `runMain graft.FuzzVerify <sfDir> <outDir> [n]`. */
 object FuzzVerify {
+  import operators.GenerationStore.jsonQuote
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 300
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val corpus = SqlFuzz.cases(n)
     corpus.foreach { c =>
       SqlGate.submit(spark, sfDir, c.sql).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/${c.name}")
     }
-    val json = corpus.map(c => s"${Verify.jsonQuote(c.name)}: ${Verify.jsonQuote(c.sql)}")
+    val json = corpus.map(c => s"${jsonQuote(c.name)}: ${jsonQuote(c.sql)}")
       .mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)

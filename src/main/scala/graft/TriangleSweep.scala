@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the q147 sampleMod advisor: at the 30× fixture,
@@ -26,23 +25,13 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.TriangleSweep [sfDir] [threshold] [budget]" */
 object TriangleSweep {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val out = sys.env.getOrElse("SPARK_GRAFT_SWEEP_OUT", "TRIANGLE_SWEEP.json")
     val sfDir = if (args.length > 0) args(0) else "/root/repo/scaledata/sf3skew"
     val threshold = if (args.length > 1) args(1).toDouble else 0.4
     val budget = if (args.length > 2) args(2).toLong else 100000000L
-    val spark = SessionDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val S = graft.operators.Similarity
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    import Harness.timed
     val emb = Tables.embeddings(spark, sfDir)
     val (wv, wvSec) = timed(S.wedgeVolume(emb, threshold))
     val mod = S.sampleModFor(wv, budget)

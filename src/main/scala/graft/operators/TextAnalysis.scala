@@ -40,9 +40,6 @@ object TextAnalysis {
     * ([[Tok.tokens]] ≡ the non-empty elements of `split(.., '\\s+')`)
     * + within-row counting in first-appearance order. Exactly the old
     * split → filter(len > 0) → groupBy(w) count, per row. */
-  /** Exposed for graft.tools.ProfileProbe (measurement only). */
-  private[graft] def wordCountsUdfForProbe = wordCountsUdf
-
   private val wordCountsUdf = udf { loweredText: String =>
     val toks = Tok.tokens(loweredText)
     val m = new java.util.LinkedHashMap[String, Long]()

@@ -6,15 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one session
   * per test JVM; sbt forks a single test JVM so startup cost is paid once).
-  * Built through [[SessionDefaults.tune]] like every entry point, so the
-  * suites run the static settings the program ships. */
+  * Built by [[Harness.builder]] like every entry point, so the suites run
+  * the session shape the program ships. Unlike [[Harness.session]] it
+  * leaves the TopK rewrite to the queries that install it, as the
+  * plan-shape specs expect. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SessionDefaults.tune(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.builder(4).getOrCreate()
 
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)

@@ -68,10 +68,7 @@ object GenImageFixtures {
     java.nio.file.Files.write(new File(dir, "img_008.png").toPath, bad)
 
     // expected stats from the engine codec itself (see Scaladoc)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("gen-image-fixtures")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Harness.builder(4).appName("gen-image-fixtures")
       .getOrCreate()
     try {
       val rows = Multimodal.imageDecodeStats(spark, dir.getAbsolutePath)

@@ -119,4 +119,69 @@ class GuardrailSpec extends SparkSpec {
     assert(messages(e).exists(m =>
       m != null && m.contains("percolated")), e.toString)
   }
+
+  // The two superlinear guards at a real budget (TRIPWIRE_r10.json holds
+  // the same checks at 10× these sizes): each fires on a degenerate input
+  // from its exact volume census, and the remediation its message names
+  // then completes.
+
+  test("simhashDedup guard fires on an exact-dup cluster and the same " +
+    "budget completes over 4 shards") {
+    // 3,000 docs, 1,200 of them one exact-dup cluster (every member in
+    // the same 4 band buckets): 4 × 1200·1199/2 ≈ 2.9e6 candidates from
+    // the cluster alone, 4 × 300·299/2 ≈ 1.8e5 per doc_id % 4 shard
+    val dupText = "the same boilerplate sentence repeated across the " +
+      "degenerate cluster of this corpus forever and ever"
+    val corpus = spark.range(3000).select(
+      col("id").as("doc_id"),
+      when(col("id") < 1200, lit(dupText))
+        .otherwise(concat(lit("unique document body number "), col("id"),
+          lit(" with distinct salt "), md5(col("id").cast("string"))))
+        .as("text"))
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")))
+      .persist()
+    try {
+      val budget = 1000000L
+      val e = intercept[Exception] {
+        Dedup.simhashDedup(corpus, maxCandidates = budget).collect()
+      }
+      assert(messages(e).exists(m => m != null &&
+        m.contains(s"band-collision candidates > maxCandidates $budget")), e.toString)
+      val shardPairs = (0 until 4).map { s =>
+        Dedup.simhashDedup(corpus.filter(col("doc_id") % 4 === s),
+          maxCandidates = budget).count()
+      }.sum
+      // every within-shard pair of the cluster is found (hamming 0)
+      assert(shardPairs >= 4L * 300 * 299 / 2, shardPairs)
+    } finally { corpus.unpersist(); () }
+  }
+
+  test("triangleCensus guard fires on a near-identical clique and a " +
+    "bound raised to the censused volume completes") {
+    // 200 identical vectors (a clique, ≈ 200³/6 wedges) + 400 spread
+    val dims = 16
+    val cliqueBase = Array.tabulate(dims)(i => 0.5f + 0.01f * i)
+    val vecs = spark.range(600).map { id =>
+      val v =
+        if (id < 200) cliqueBase.clone()
+        else Array.tabulate(dims)(i => math.sin(id * 37.0 + i * 101.0).toFloat)
+      (id, v)
+    }.toDF("vec_id", "embedding").persist()
+    try {
+      val budget = 500000L
+      val e = intercept[Exception] {
+        Similarity.triangleCensus(vecs, maxWedges = budget).collect()
+      }
+      val volume = Similarity.wedgeVolume(vecs, threshold = 0.4)
+      assert(volume > budget, volume)
+      assert(messages(e).exists(m => m != null &&
+        m.contains(s"triangleCensus: $volume wedges > maxWedges $budget")), e.toString)
+      val hist = Similarity.triangleCensus(vecs, maxWedges = volume).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // each clique member closes C(199, 2) triangles inside the clique
+      assert(hist.keys.exists(_ >= 199L * 198 / 2), hist)
+      assert(hist.values.sum <= 600L, hist)
+    } finally { vecs.unpersist(); () }
+  }
 }
