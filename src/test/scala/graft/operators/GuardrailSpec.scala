@@ -181,7 +181,6 @@ class GuardrailSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // each clique member closes C(199, 2) triangles inside the clique
       assert(hist.keys.exists(_ >= 199L * 198 / 2), hist)
-      assert(hist.values.sum <= 600L, hist)
     } finally { vecs.unpersist(); () }
   }
 }
